@@ -5,7 +5,7 @@ phases and capture plans so optimizations are driven by measurements.
 
 Modes:
   python bench_extra.py cdc   [--docs N] [--events-per-doc K] [--batches B]
-                              [--buckets NB] [--strategy auto] [--repeat R]
+                              [--buckets NB] [--repeat R]
       Runs the same CDC replay as bench.py's cdc leg (fresh warehouse per
       repeat) and prints the per-batch phase breakdown incl. the sub-phase
       timers the engine records (plan construction vs combined write etc.).
@@ -86,10 +86,7 @@ def cdc(args) -> None:
             events = changes_df(spark, n_docs, n_events, n_parts=CPUS, parallelism=CPUS)
             rep = ChangeStreamReplayer(
                 spark, wh, "sequences", f"bx{r}", evolve_schema=False,
-                options=MigrationOptions(
-                    merge_strategy=args.strategy,
-                    pipeline_commit=not args.no_pipeline,
-                ),
+                options=MigrationOptions(pipeline_commit=not args.no_pipeline),
             )
             t1 = time.monotonic()
             ms = rep.apply_changes(
@@ -107,8 +104,7 @@ def cdc(args) -> None:
                 "phases": [
                     {k: v for k, v in m.items()
                      if k.endswith("_s") or k.endswith("_ms")
-                     or k in ("batch_id", "strategy", "staged_bytes",
-                              "append_detail")}
+                     or k in ("batch_id", "append_detail")}
                     for m in ms
                 ],
             }), flush=True)
@@ -122,7 +118,6 @@ def cdcplans(args) -> None:
     the plan evidence for plans/r06/."""
     from mongo_bulk_data_migration_spark import Catalog
     from mongo_bulk_data_migration_spark.operators.merge import build_merge_plan
-    from mongo_bulk_data_migration_spark.plans.migration import MigrationOptions
     from mongo_bulk_data_migration_spark.sources.fixtures import (
         SEQUENCES_SCHEMA,
         changes_df,
@@ -140,10 +135,7 @@ def cdcplans(args) -> None:
         t = cat.create_table("sequences", SEQUENCES_SCHEMA, num_buckets=args.buckets)
         t.append(sequences_df(spark, n_docs, parallelism=CPUS))
         events = changes_df(spark, n_docs, n_events, n_parts=CPUS, parallelism=CPUS)
-        rep = ChangeStreamReplayer(
-            spark, wh, "sequences", "plans", evolve_schema=False,
-            options=MigrationOptions(merge_strategy=args.strategy),
-        )
+        rep = ChangeStreamReplayer(spark, wh, "sequences", "plans", evolve_schema=False)
         epb = max(n_events // args.batches, 1)
         pending = rep.hwm.filter_events(spark, events)
         pre = rep._prestage(t, pending, epb, os.path.join(wh, "_tmp", "staged"))
@@ -151,11 +143,9 @@ def cdcplans(args) -> None:
         plan = build_merge_plan(
             t, spark, None,
             update_cols=rep._update_cols(t),
-            strategy=rep.config.options.merge_strategy,
             carry_cols=["seq", "transform", "part"],
             value_exprs=rep._value_exprs(t),
             prestaged=b0,
-            materialize_combined=args.materialize,
         )
         mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted")
@@ -165,7 +155,6 @@ def cdcplans(args) -> None:
         ):
             path = os.path.join("plans", "r06", f"{name}_{args.tag}.txt")
             with open(path, "w") as f:
-                f.write(f"strategy={plan.strategy} staged_bytes={plan.staged_bytes}\n")
                 f.write(df._jdf.queryExecution().explainString(mode))
             print("wrote", path)
         plan.release()
@@ -216,7 +205,6 @@ def main() -> None:
     c.add_argument("--events-per-doc", type=int, default=4)
     c.add_argument("--batches", type=int, default=4)
     c.add_argument("--buckets", type=int, default=32)
-    c.add_argument("--strategy", default="auto")
     c.add_argument("--no-pipeline", action="store_true")
     c.add_argument("--shj", default=None,
                    help="override AQE maxShuffledHashJoinLocalMapThreshold")
@@ -229,8 +217,6 @@ def main() -> None:
     p.add_argument("--events-per-doc", type=int, default=4)
     p.add_argument("--batches", type=int, default=4)
     p.add_argument("--buckets", type=int, default=32)
-    p.add_argument("--strategy", default="auto")
-    p.add_argument("--materialize", action="store_true")
     p.add_argument("--tag", default="after")
     p.set_defaults(fn=cdcplans)
     q = sub.add_parser("queries")

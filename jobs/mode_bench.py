@@ -1,9 +1,8 @@
-"""Merge physical-strategy bench: cow-broadcast vs cow-shuffle vs merge-on-read.
+"""Merge commit-mode bench: copy-on-write vs merge-on-read.
 
-VERDICT r2 #8: the broadcast COW path reads the touched buckets twice (inner
-join + untouched anti join, `operators/merge.py`); whether that double scan
-loses to the single full-outer pass (shuffle) or to MoR delta appends is an
-empirical question per batch size — measure it, don't guess.  This harness
+COW rewrites the touched buckets per batch; MoR appends an O(batch) delta
+layer and defers the fold to reads or compaction.  Which wins depends on
+batch size and read:write ratio — measure it, don't guess.  This harness
 runs the SAME deterministic CDC replay under each mode in fresh JVMs,
 interleaved round-robin (one round ~ one host window) with a pre-registered
 window gate per leg, and reports the median events/sec per mode.
@@ -35,17 +34,15 @@ from mongo_bulk_data_migration_spark.session import get_spark
 from mongo_bulk_data_migration_spark import Catalog
 from mongo_bulk_data_migration_spark.sources.fixtures import (
     SEQUENCES_SCHEMA, changes_df, sequences_df)
-from mongo_bulk_data_migration_spark.plans.migration import MigrationOptions
 from mongo_bulk_data_migration_spark.streaming.replay import ChangeStreamReplayer
 
 cores = {cores}
 n_docs = {n_docs}
 n_events = {n_events}
 batches = {batches}
-strategy = {strategy!r}
 merge_mode = {merge_mode!r}
 auto_compact = {auto_compact}
-spark = get_spark(app_name=f"mode-{{strategy}}-{{merge_mode}}",
+spark = get_spark(app_name=f"mode-{{merge_mode}}",
                   master=f"local[{{cores}}]", shuffle_partitions=cores)
 wh = tempfile.mkdtemp(prefix="mode_")
 try:
@@ -55,8 +52,7 @@ try:
                                       "auto_compact_layers": auto_compact}})
     t.append(sequences_df(spark, n_docs, parallelism=cores))
     events = changes_df(spark, n_docs, n_events, n_parts=cores, parallelism=cores)
-    rep = ChangeStreamReplayer(spark, wh, "sequences", "mode", evolve_schema=False,
-                               options=MigrationOptions(merge_strategy=strategy))
+    rep = ChangeStreamReplayer(spark, wh, "sequences", "mode", evolve_schema=False)
     t0 = time.monotonic()
     ms = rep.apply_changes(events, events_per_batch=max(n_events // batches, 1))
     wall = time.monotonic() - t0
@@ -75,35 +71,32 @@ try:
         ).collect()
         reads.append(round(time.monotonic() - r0, 3))
     print("RESULT " + json.dumps({{
-        "strategy": strategy, "merge_mode": merge_mode, "cores": cores,
+        "merge_mode": merge_mode, "cores": cores,
         "auto_compact": auto_compact, "final_delta_layers": t2.delta_layers(),
         "n_docs": n_docs, "n_events": n_events, "n_batches": len(ms),
         "wall_s": round(wall, 2), "events_per_sec": round(n_events / wall, 1),
         "read_k": {read_k}, "read_s": reads,
         "read_median_s": sorted(reads)[len(reads) // 2],
-        "staged_bytes": max((m.get("staged_bytes") or 0) for m in ms),
     }}))
 finally:
     shutil.rmtree(wh, ignore_errors=True)
     spark.stop()
 """
 
-# (name, merge_strategy, merge_mode, auto_compact_layers; 0 disables)
+# (name, merge_mode, auto_compact_layers; 0 disables)
 MODES = [
-    ("cow-broadcast", "broadcast", "cow", 0),
-    ("cow-shuffle", "shuffle", "cow", 0),
-    ("mor-broadcast", "broadcast", "mor", 0),
-    ("mor-shuffle", "shuffle", "mor", 0),
+    ("cow", "cow", 0),
+    ("mor", "mor", 0),
     # VERDICT r3 #8 cadence row: fold delta layers mid-replay every k=2
-    ("mor-autocompact", "broadcast", "mor", 2),
+    ("mor-autocompact", "mor", 2),
 ]
 
 
-def run_leg(cores, n_docs, n_events, batches, buckets, strategy, merge_mode,
+def run_leg(cores, n_docs, n_events, batches, buckets, merge_mode,
             auto_compact=0, read_k=8) -> dict:
     code = WORKER.format(
         repo=REPO, cores=cores, n_docs=n_docs, n_events=n_events,
-        batches=batches, buckets=buckets, strategy=strategy, merge_mode=merge_mode,
+        batches=batches, buckets=buckets, merge_mode=merge_mode,
         auto_compact=auto_compact, read_k=read_k,
     )
     out = subprocess.run([sys.executable, "-c", code], capture_output=True,
@@ -112,7 +105,7 @@ def run_leg(cores, n_docs, n_events, batches, buckets, strategy, merge_mode,
         if line.startswith("RESULT "):
             return json.loads(line[len("RESULT "):])
     sys.stderr.write(out.stdout[-2000:] + "\n" + out.stderr[-4000:])
-    raise RuntimeError(f"no RESULT from {strategy}/{merge_mode}")
+    raise RuntimeError(f"no RESULT from {merge_mode}")
 
 
 def main() -> None:
@@ -141,9 +134,9 @@ def main() -> None:
 
     log_path = os.path.join(REPO, "BENCH", "mode_runs.jsonl")
     os.makedirs(os.path.dirname(log_path), exist_ok=True)
-    results: dict[str, list[dict]] = {name: [] for name, _, _, _ in MODES}
+    results: dict[str, list[dict]] = {name: [] for name, _, _ in MODES}
     for rep in range(args.repeats):
-        for name, strategy, merge_mode, ac in MODES:
+        for name, merge_mode, ac in MODES:
             # pre-registered gate before each timed leg
             gated = False
             for w in range(args.window_max_waits + 1):
@@ -156,7 +149,7 @@ def main() -> None:
                                                   "wait": w}}), flush=True)
                 time.sleep(args.window_wait_s)
             r = run_leg(args.cores, args.docs, n_events, args.batches,
-                        args.buckets, strategy, merge_mode, auto_compact=ac,
+                        args.buckets, merge_mode, auto_compact=ac,
                         read_k=args.read_k)
             r.update({"round": rep, "probe_mops": probe,
                       "io_mbps": host_probe_io(), "gate_need": round(need, 1),
@@ -167,7 +160,7 @@ def main() -> None:
             print(json.dumps(r), flush=True)
 
     lines = [
-        "# BENCH/MODES — merge physical strategy comparison",
+        "# BENCH/MODES — merge commit-mode comparison",
         "",
         f"Same deterministic CDC replay ({args.docs:,} docs, {n_events:,} events,",
         f"{args.batches} batches, {args.buckets} buckets, local[{args.cores}]),",
@@ -181,7 +174,7 @@ def main() -> None:
     ]
     medians = {}
     totals = {}
-    for name, _, _, _ in MODES:
+    for name, _, _ in MODES:
         rs = sorted(r["events_per_sec"] for r in results[name])
         medians[name] = rs[len(rs) // 2]
         probes = [r["probe_mops"] for r in results[name]]
@@ -196,8 +189,6 @@ def main() -> None:
             + f" | {min(probes):.0f} | {'/'.join(str(x) for x in layers)} |"
             f" {scan_med:.2f} | {totals[name]:,.1f} |"
         )
-    staged = max(r.get("staged_bytes", 0) for rs in results.values() for r in rs)
-
     def _med(name, key):
         vs = sorted(r[key] for r in results[name])
         return vs[len(vs) // 2]
@@ -205,10 +196,9 @@ def main() -> None:
     cross = []
     ac_w, ac_s = _med("mor-autocompact", "wall_s"), _med("mor-autocompact",
                                                          "read_median_s")
-    for ref in ("mor-broadcast", "mor-shuffle"):
-        rw, rs_ = _med(ref, "wall_s"), _med(ref, "read_median_s")
-        if rs_ > ac_s:
-            cross.append(f"vs {ref}: K ≈ {((ac_w - rw) / (rs_ - ac_s)):.0f}")
+    rw, rs_ = _med("mor", "wall_s"), _med("mor", "read_median_s")
+    if rs_ > ac_s:
+        cross.append(f"vs mor: K ≈ {((ac_w - rw) / (rs_ - ac_s)):.0f}")
     lines += [
         "",
         f"The `replay + {args.read_k} reads` column is the two-sided cadence"
@@ -229,17 +219,9 @@ def main() -> None:
         " universal throughput win: choose `auto_compact_layers` by the"
         " table's read:write ratio (this table is the measured trade).",
         "",
-        f"Per-batch staged source: ~{staged / (1 << 20):.1f} MB on disk "
-        f"(uncompressed parquet) — the measured quantity `merge_strategy='auto'`"
-        " compares against `broadcast_threshold_bytes` (default 64 MB).",
-        "",
-        "Interpretation notes: the broadcast COW path scans the touched buckets"
-        " twice (inner join + untouched anti join) but never shuffles the"
-        " carried-over rows; the shuffle path scans once but full-outer"
-        "-shuffles everything; MoR writes only O(batch) deltas and defers the"
-        " fold to reads/compaction.  The auto default keeps broadcast below"
-        " the threshold and shuffle above it; this table is the evidence.",
-        "",
+        "Interpretation notes: COW rewrites every touched bucket per batch"
+        " (untouched rows flow scan -> anti join -> write, unshuffled); MoR"
+        " writes only O(batch) deltas and defers the fold to reads/compaction.",
         "",
         "`mor-autocompact` (auto_compact_layers=2) pays ~2 mid-replay"
         " compaction commits per 4-batch window to bound read amplification"

@@ -28,7 +28,6 @@ def main() -> None:
     ap.add_argument("--migration-id", required=True)
     ap.add_argument("--events", required=True, help="parquet dir of change events")
     ap.add_argument("--events-per-batch", type=int, default=5_000_000)
-    ap.add_argument("--merge-strategy", choices=["auto", "broadcast", "shuffle"], default="auto")
     ap.add_argument("--dedup-salt", type=int, default=None)
     ap.add_argument("--no-evolve-schema", action="store_true")
     ap.add_argument("--rollback", action="store_true", help="roll the migration back instead")
@@ -82,9 +81,7 @@ def main() -> None:
         args.warehouse,
         args.table,
         args.migration_id,
-        options=MigrationOptions(
-            merge_strategy=args.merge_strategy, dedup_salt=args.dedup_salt
-        ),
+        options=MigrationOptions(dedup_salt=args.dedup_salt),
         evolve_schema=not args.no_evolve_schema,
     )
     if args.rollback:
@@ -109,9 +106,7 @@ def main() -> None:
             shutil.copytree(src_tbl, os.path.join(wtmp, args.table))
             warm = ChangeStreamReplayer(
                 spark, wtmp, args.table, f"{args.migration_id}-warm",
-                options=MigrationOptions(
-                    merge_strategy=args.merge_strategy, dedup_salt=args.dedup_salt
-                ),
+                options=MigrationOptions(dedup_salt=args.dedup_salt),
                 evolve_schema=not args.no_evolve_schema,
             )
             warm.apply_changes(
@@ -151,7 +146,7 @@ def main() -> None:
                     {
                         k: m.get(k)
                         for k in ("batch_id", "wall_s", "lineage_s", "plan_s",
-                                  "changelog_s", "merge_s", "strategy")
+                                  "changelog_s", "merge_s")
                     }
                     for m in metrics
                 ],

@@ -59,7 +59,6 @@ cores = {cores}
 n_docs = {n_docs}
 n_events = {n_events}
 batches = {batches}
-strategy = {strategy!r}
 spark = get_spark(app_name=f"scale-{{cores}}", master=f"local[{{cores}}]",
                   shuffle_partitions=cores)
 wh = tempfile.mkdtemp(prefix=f"scale{{cores}}_")
@@ -68,9 +67,7 @@ try:
     t = cat.create_table("sequences", SEQUENCES_SCHEMA, num_buckets={buckets})
     t.append(sequences_df(spark, n_docs, parallelism=cores))
     events = changes_df(spark, n_docs, n_events, n_parts=cores, parallelism=cores)
-    from mongo_bulk_data_migration_spark.plans.migration import MigrationOptions
-    rep = ChangeStreamReplayer(spark, wh, "sequences", "scale", evolve_schema=False,
-                               options=MigrationOptions(merge_strategy=strategy))
+    rep = ChangeStreamReplayer(spark, wh, "sequences", "scale", evolve_schema=False)
     if {warm_docs}:
         # untimed engine warmup on a small clone (same protocol as
         # replay_job --warmup-events): deploy-shape executors are
@@ -86,9 +83,7 @@ try:
             wev = changes_df(spark, {warm_docs}, {warm_docs} * 2,
                              n_parts=cores, parallelism=cores)
             wrep = ChangeStreamReplayer(spark, wwh, "sequences", "warm",
-                                        evolve_schema=False,
-                                        options=MigrationOptions(
-                                            merge_strategy=strategy))
+                                        evolve_schema=False)
             wrep.apply_changes(wev, events_per_batch={warm_docs})
         finally:
             shutil.rmtree(wwh, ignore_errors=True)
@@ -111,11 +106,11 @@ finally:
 """
 
 
-def run(cores: int, n_docs: int, n_events: int, batches: int, buckets: int, strategy: str = "broadcast", warm_docs: int = 0) -> dict:
+def run(cores: int, n_docs: int, n_events: int, batches: int, buckets: int, warm_docs: int = 0) -> dict:
     t0_marker = tempfile.mktemp(prefix="scale_t0_")
     code = WORKER.format(
         repo=REPO, cores=cores, n_docs=n_docs, n_events=n_events, batches=batches,
-        buckets=buckets, strategy=strategy, warm_docs=warm_docs,
+        buckets=buckets, warm_docs=warm_docs,
         t0_marker=t0_marker,
     )
     # Pin the whole worker process tree (JVM task threads AND its GC/IO/
@@ -291,7 +286,6 @@ def main() -> None:
                          "the host can actually deliver this window")
     ap.add_argument("--xn-cores", type=int, default=0)
     ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--strategy", choices=["auto", "broadcast", "shuffle"], default="auto")
     ap.add_argument("--report-only", action="store_true",
                     help="rebuild BENCH/BASELINE.md from logged pairs of the "
                          "current commit + workload (crash/timeout recovery)")
@@ -424,10 +418,10 @@ def main() -> None:
         host_par_eff = round(cap4n / base1 / args.xn_cores, 3) if base1 else None
         probe0 = host_probe()
         r_n = run(args.n_cores, args.docs, n_events, args.batches, args.buckets,
-                  args.strategy, args.warmup_docs)
+                  args.warmup_docs)
         probe1 = host_probe()
         r_4n = run(args.xn_cores, args.docs, n_events, args.batches, args.buckets,
-                   args.strategy, args.warmup_docs)
+                   args.warmup_docs)
         probe2 = host_probe()
         eff = (r_4n["events_per_sec"] / r_n["events_per_sec"]) / factor
         # Pre-registered MID-LEG validity rule (stated in LegSampler and
@@ -458,7 +452,7 @@ def main() -> None:
                       "host_par_eff": host_par_eff, "cpu_eff": cpu_eff})
         with open(log_path, "a") as f:
             for r, pr in ((r_n, [probe0, probe1]), (r_4n, [probe1, probe2])):
-                f.write(json.dumps({**r, "strategy": args.strategy, "commit": commit,
+                f.write(json.dumps({**r, "commit": commit,
                                     "pair": i, "host_probe_mops": pr,
                                     "host_io_mbps": host_probe_io(),
                                     "host_par_eff": host_par_eff,

@@ -155,7 +155,7 @@ def fold_grouped_delta(
             F.when(F.col("n_rows") <= 0, F.lit("delete")).otherwise(F.lit("put")),
         )
     )
-    plan = build_merge_plan(state, spark, src, with_observation=False)
+    plan = build_merge_plan(state, spark, src)
     try:
         return run_merge(
             state, plan, operation="ivm-fold", applied={marker_id: marker}

@@ -21,35 +21,30 @@ ops:
               `RollbackBulk.ts:34-37`, `CHANGLOG.md:60-62`)
   ``delete``  matched -> remove, unmatched -> no-op
 
-Physical strategy — single-pass, batch-bounded discipline
-----------------------------------------------------------
-The batch protocol needs the SAME join twice: pre-images for the changelog
-(committed first — WAL ordering) and merged rows for the table.  Naively that
-re-executes the target scan + join per consumer; instead:
-
-1. the prepared source is STAGED to parquet scratch — its (possibly
-   expensive) upstream lineage (last-wins aggregation, event decode) runs
-   exactly once, and the staging write doubles as the touched-bucket
-   discovery + source-count job via an attached Observation;
-2. the join output is projected to one ``combined`` frame carrying BOTH the
-   pre-image and the merged value per column — materialized to parquet
-   scratch (NOT `.persist()`: the in-memory columnar cache is a slow path
-   for array columns) and holding ONLY source-affected rows, so the
-   per-batch working set is proportional to the batch, not the table;
-3. every consumer (changelog pre-images, merged rows, matched-key set,
-   metrics) reads a column-pruned slice of the scratch files.
+Physical plan — one shape for every caller
+------------------------------------------
+The batch's KEY SET is broadcast (tiny even when the payload is not), the
+touched target buckets are semi-filtered by it before any exchange, and a
+full-outer join of the O(batch) surviving rows with the source follows.
+Untouched rows of the touched buckets flow scan -> anti join on the same
+broadcast key set -> write, never through a shuffle; only the changed and
+inserted slice is repartitioned by bucket.  A key set above
+``BROADCAST_MAX_KEYS`` (or of unknown size) is not broadcast: the same
+semi/anti joins then shuffle, so a rollback or an unbatched ``update()`` of
+10^9 keys never builds a driver-side hash relation.
 
 - bucket pruning: only buckets containing source keys are read & rewritten
   (copy-on-write bounded by the touched fraction);
-- ``broadcast`` strategy (default): the target side is joined broadcast-hash
-  — never shuffled; untouched rows flow scan -> write directly (anti join
-  against the broadcast key set); only the changed/inserted slice is
-  repartitioned by bucket before the partitionBy write;
-- ``shuffle`` strategy: one full-outer sort-merge join for batches too large
-  to broadcast (no driver-side broadcast build at all); AQE skew-join splits
-  oversized partitions.  Key uniqueness per side means the join cannot skew
-  by multiplicity; skew lives upstream in the event->key collapse (see dedup
-  salting).
+- the join is projected to one frame carrying BOTH the pre-image and the
+  merged value per column.  It is not materialized: each consumer
+  (changelog pre-images, COW result, MoR delta) recomputes it inside its own
+  job and column-prunes through the projection, so the token-transform
+  expressions run only in the merge job.  The replayer and ``update()`` run
+  the changelog and merge consumers concurrently;
+- the source is staged to parquet scratch once (its upstream lineage runs
+  exactly once; the staging write doubles as the touched-bucket discovery)
+  unless the caller passes the touched buckets (``rollback()``: the
+  changelog manifest knows them) or a prestaged slice (replay).
 """
 
 from __future__ import annotations
@@ -65,22 +60,21 @@ from ..sources.laketable import BUCKET_COL, DELETED_COL, LakeTable, bucket_expr
 
 OP_COL = "__op"
 _SKEY = "__s_key"
+_COUNTERS = ("n_matched", "n_modified", "n_removed", "n_insert_skipped", "n_inserted")
+# largest key set the semi/anti joins broadcast: a hash relation of N string
+# keys costs ~40-60 B/key on the driver, so 8M keys ~ 400 MB — well under
+# Spark's 8 GB / 512M-row broadcast cap; larger sets take shuffled joins
+BROADCAST_MAX_KEYS = 8_000_000
 
 
 @dataclass
 class MergePlan:
-    result: DataFrame            # post-merge rows for the touched buckets
+    result: DataFrame            # COW: post-merge rows for the touched buckets
     preimage: DataFrame          # (key, __op, __matched, __pre_<col>..., carries)
     touched: list[int]           # bucket ids to overwrite
-    strategy: str = "broadcast"  # physical strategy actually chosen
-    staged_bytes: int = 0        # on-disk size of the staged prepared source
+    delta: DataFrame             # MoR: one layer of new rows + tombstones
     observations: dict[str, Observation] = field(default_factory=dict)
-    delta: DataFrame | None = None     # merge-on-read layer: new rows + tombstones
-    source: DataFrame | None = None    # staged prepared source (clean lineage)
-    combined: DataFrame | None = None  # staged single-pass join output
-    inserts_frame: DataFrame | None = None  # for n_inserted (cheap: staged parents)
     scratch_dir: str | None = None     # staging dir, removed on release()
-    result_prepartitioned: bool = False  # result already bucket-organized
     static_metrics: dict[str, int] = field(default_factory=dict)  # prestage stats
 
     def metrics(self) -> dict[str, int]:
@@ -93,17 +87,8 @@ class MergePlan:
             for k, v in observed(o).items():
                 if isinstance(v, (int, float)) or v is None:
                     out[k] = int(v or 0)
-        if "n_inserted" not in out:
-            if {"n_src_upserts", "n_put_matched", "n_insert_skipped"} <= out.keys():
-                # derived, no extra job: upsert-class source rows that neither
-                # replaced a matched row nor were skipped as insert-if-absent
-                out["n_inserted"] = (
-                    out["n_src_upserts"] - out["n_put_matched"] - out["n_insert_skipped"]
-                )
-            elif self.inserts_frame is not None:
-                out["n_inserted"] = self.inserts_frame.count()
-            else:
-                out["n_inserted"] = 0
+        for k in _COUNTERS:
+            out.setdefault(k, 0)
         return out
 
     def release(self) -> None:
@@ -129,6 +114,12 @@ def _prep_source(table: LakeTable, src: DataFrame, carry_cols: list[str]) -> Dat
 
 def _cnt(cond):
     return F.sum(F.when(cond, 1).otherwise(0))
+
+
+def _kept(matched: Column, op: Column) -> Column:
+    """Rows that survive into the merged table: matched non-deletes (incl.
+    insert-if-absent no-ops, which keep the old row) and unmatched upserts."""
+    return (matched & (op != "delete")) | (~matched & op.isin("put", "insert"))
 
 
 # lossless numeric widenings only: narrowing (long->int) or precision-losing
@@ -169,424 +160,154 @@ def check_source_types(table: LakeTable, src: DataFrame) -> None:
         )
 
 
-# 'auto' stops broadcasting the full payload above this ESTIMATED in-memory
-# relation size.  The staged on-disk bytes are parquet-encoded (dictionary +
-# RLE even with codec=uncompressed): measured on the benchmark token arrays,
-# a 9.1 MB staged batch (55k rows x ~256-int arrays) expands to ~60 MB of
-# UnsafeRow hash relation — ~7-8x.  Round 5 broadcast a ~60 MB staged batch
-# (~0.5 GB relation) and paid an up-to-30 s GC-cliff batch for it; the
-# expansion factor below keeps 'auto' honest about what it is broadcasting.
-BROADCAST_MAX_STAGED_BYTES = 64 << 20
-BCAST_EXPANSION = int(os.environ.get("MBDM_BCAST_EXPANSION", "8"))
-
-# 'auto' prefers the key-broadcast 'semi' strategy over the whole-table
-# full-outer 'shuffle' while the batch's KEY SET is small enough to broadcast
-# (a hash relation of N string keys costs ~40-60 B/key, so 8M keys ~ 400 MB —
-# well under the 8 GB / 512M-row broadcast cap with headroom).  Past that the
-# plain full-outer join remains the only shape with no driver-side build.
-SEMI_MAX_KEYS = int(os.environ.get("MBDM_SEMI_MAX_KEYS", str(8_000_000)))
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
 def build_merge_plan(
     table: LakeTable,
     spark: SparkSession,
     src: DataFrame | None,
     update_cols: list[str] | None = None,
-    strategy: str = "auto",
-    with_observation: bool = True,
     carry_cols: list[str] | None = None,
     value_exprs: dict[str, Column] | None = None,
     bypass_validation: bool = False,
-    broadcast_threshold_bytes: int = BROADCAST_MAX_STAGED_BYTES,
     prestaged: dict | None = None,
-    materialize_combined: bool = True,
+    touched: list[int] | None = None,
+    n_keys: int | None = None,
 ) -> MergePlan:
     """Build the merged rows + pre-images for one batch (single target scan).
 
     The caller materializes ``preimage`` into the changelog FIRST, then
     commits ``result`` via ``run_merge`` — the reference's backup-before-write
     WAL discipline (``/root/reference/src/MongoBulkDataMigration.ts:170-173``).
-    """
-    import time as _time
 
-    _t0 = _time.monotonic()
+    ``touched`` (bucket ids known to cover every source key) skips staging
+    the source; a key outside them fails the write loudly.  ``n_keys`` is an
+    upper bound on the source keys that comes with ``touched`` (staging
+    counts them); without it the key set is not broadcast.
+    """
     key = table.key_col
-    data_cols = [f.name for f in table.schema.fields]
+    data_cols = [f.name for f in table.schema.fields if f.name != key]
     update_set = set(update_cols if update_cols is not None else data_cols)
-    scratch = os.path.join(table.root, "_tmp", f"batch-{uuid.uuid4().hex}")
+    scratch = None
     observations: dict[str, Observation] = {}
     static_metrics: dict[str, int] = {}
     if prestaged is not None:
         # the caller staged every batch's prepared source in ONE upfront
         # write (replay prestage path) — this batch is a directory-pruned
-        # slice; touched buckets / sizes / counts were computed there, so
-        # the per-batch staging job and its observation disappear entirely
+        # slice; touched buckets and counts were computed there
         s = spark.read.schema(prestaged["schema"]).parquet(prestaged["path"])
         carry_cols = [
             c for c in (carry_cols or [])
             if f"__c_{c}" in prestaged["schema"].fieldNames()
         ]
-        touched = sorted(prestaged["touched"])
-        staged_bytes = int(prestaged["staged_bytes"])
+        touched = prestaged["touched"]
         static_metrics = dict(prestaged.get("static_metrics") or {})
+        n_keys = static_metrics.get("n_source_keys")
     else:
         carry_cols = [c for c in (carry_cols or []) if c in src.columns]
         if not bypass_validation:
             check_source_types(table, src)
-
-        # Stage the prepared source to parquet scratch: the (possibly
-        # expensive) upstream lineage — last-wins aggregation, event decoding
-        # — is paid exactly once; every downstream consumer (touched-bucket
-        # discovery, the broadcast build per action, insert anti join) reads
-        # clean columnar files with pruning instead of re-executing the plan.
-        staged = _prep_source(table, src, carry_cols)
-        o_src = Observation("merge-src")
-        observations["source"] = o_src
-        # the staging write doubles as the touched-bucket discovery and the
-        # source-count job: zero extra actions
-        staged_obs = staged.observe(
-            o_src,
-            F.collect_set(F.col(BUCKET_COL)).alias("touched_buckets"),
-            F.count(F.lit(1)).alias("n_source_keys"),
-            _cnt(F.col(OP_COL).isin("put", "insert")).alias("n_src_upserts"),
-        )
-        staged_obs.write.mode("overwrite").option("compression", "uncompressed").parquet(
-            os.path.join(scratch, "src")
-        )
-        s = spark.read.schema(staged.schema).parquet(os.path.join(scratch, "src"))
-
-        src_stats = o_src.get
-        touched = sorted(src_stats.get("touched_buckets") or [])
-
-        # strategy auto-selection from MEASURED size, not a guess: the staged
-        # uncompressed-parquet footprint of the prepared batch decides whether
-        # the source side is safe to broadcast. At 100 TB / events_per_batch
-        # in the millions, an unconditional broadcast of the batch is the one
-        # true scale-killer in this path — large batches take the full-outer
-        # sort-merge join instead (AQE handles skewed partitions there).
-        staged_bytes = _dir_bytes(os.path.join(scratch, "src"))
-        static_metrics["n_source_keys"] = int(src_stats.get("n_source_keys") or 0)
-    if strategy == "auto":
-        n_keys = int(static_metrics.get("n_source_keys") or 0)
-        if staged_bytes * BCAST_EXPANSION <= broadcast_threshold_bytes:
-            strategy = "broadcast"
-        elif n_keys and n_keys <= SEMI_MAX_KEYS:
-            strategy = "semi"
-        else:
-            strategy = "shuffle"
-
-    if not touched:
-        empty_pre = s.limit(0).select(
-            F.col(_SKEY).alias(key),
-            F.col(OP_COL),
-            F.lit(False).alias("__matched"),
-            *[F.col(f"__s_{c}").alias(f"__pre_{c}") for c in data_cols if c != key],
-            *[F.col(f"__c_{c}").alias(f"__{c}") for c in carry_cols],
-        )
-        return MergePlan(
-            result=table.read(spark, buckets=[]),
-            preimage=empty_pre,
-            touched=[],
-            strategy=strategy,
-            staged_bytes=staged_bytes,
-            observations=observations,
-            source=s,
-            scratch_dir=scratch,
-            static_metrics=static_metrics,
-        )
+        s = _prep_source(table, src, carry_cols)
+        if touched is None:
+            # Stage the prepared source: the (possibly expensive) upstream
+            # lineage — last-wins aggregation, event decoding — runs exactly
+            # once, and the staging write doubles as the touched-bucket
+            # discovery and source-count job via an attached Observation.
+            scratch = os.path.join(table.root, "_tmp", f"batch-{uuid.uuid4().hex}")
+            o_src = Observation("merge-src")
+            observations["source"] = o_src
+            s.observe(
+                o_src,
+                F.collect_set(F.col(BUCKET_COL)).alias("touched_buckets"),
+                F.count(F.lit(1)).alias("n_source_keys"),
+            ).write.mode("overwrite").option("compression", "uncompressed").parquet(scratch)
+            s = spark.read.schema(s.schema).parquet(scratch)
+            got = o_src.get
+            touched, n_keys = got.get("touched_buckets") or [], got.get("n_source_keys")
+    touched = sorted(touched)
     tgt = table.read(spark, buckets=touched)
 
     op = F.col(OP_COL)
+    matched = F.col(key).isNotNull() & F.col(_SKEY).isNotNull()
 
-    def merged_value(c: str, matched) -> Column:
-        """Post-merge value of column c.  'update'-op values may be computed
-        from BOTH sides via ``value_exprs`` (e.g. a token transform applied
-        to the matched target row) — this keeps CDC updates in-join."""
+    def merged_value(c: str) -> Column:
+        """Post-merge value of column c for a kept row.  'update'-op values
+        may be computed from BOTH sides via ``value_exprs`` (e.g. a token
+        transform applied to the matched target row) — this keeps CDC
+        updates in-join."""
         src_c = F.col(f"__s_{c}")
-        upd_c = value_exprs.get(c, src_c) if value_exprs else src_c
-        return (
-            F.when(matched & (op == "put"), src_c)
-            .when(matched & (op == "update") & F.lit(c in update_set), upd_c)
-            .when(op.isNotNull() & ~matched, src_c)  # full-outer inserts
-            .otherwise(F.col(c))
-        )
+        v = F.when(~matched | (op == "put"), src_c)
+        if c in update_set:
+            v = v.when(op == "update", value_exprs.get(c, src_c) if value_exprs else src_c)
+        return v.otherwise(F.col(c))
 
-    def src_row(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            *[
-                F.col(_SKEY).alias(key) if c == key else F.col(f"__s_{c}").alias(c)
-                for c in data_cols
-            ]
-        )
-
-    if strategy == "broadcast":
-        # INNER join: combined materializes ONLY source-affected rows (batch-
-        # bounded, not table-bounded).  Untouched rows never pass through a
-        # join output — they flow scan -> write below, which is what keeps
-        # the per-batch working set proportional to the batch at 100 TB.
-        joined = tgt.join(F.broadcast(s), F.col(key) == F.col(_SKEY), "inner")
-        matched = F.lit(True)
-    elif strategy == "semi":
-        # Key-broadcast pre-filter (guide §3.2/§8: decide with small rows,
-        # move big rows once): the batch's KEY SET is broadcast (tiny even
-        # when the payload is far past any broadcast threshold), the target
-        # side is semi-filtered to the touched rows BEFORE any exchange, and
-        # the full-outer payload join then shuffles O(batch) bytes from each
-        # side instead of the whole touched-bucket scan.  Untouched rows
-        # flow scan -> anti(bcast keys) -> write, never through a shuffle.
-        skeys = s.select(_SKEY)
-        touched_tgt = tgt.join(
-            F.broadcast(skeys), F.col(key) == F.col(_SKEY), "left_semi"
-        )
-        joined = touched_tgt.join(s, F.col(key) == F.col(_SKEY), "full_outer")
-        matched = F.col(key).isNotNull() & F.col(_SKEY).isNotNull()
-    elif strategy == "shuffle":
-        joined = tgt.join(s, F.col(key) == F.col(_SKEY), "full_outer")
-        matched = F.col(key).isNotNull() & F.col(_SKEY).isNotNull()
-    else:
-        raise ValueError(f"unknown merge strategy: {strategy}")
-
-    if with_observation and materialize_combined:
-        # materialized mode: the combined WRITE is the first action and
-        # always executes the full join — attach the metrics there
-        o = Observation("merge-matched")
-        observations["matched"] = o
-        joined = joined.observe(
-            o,
-            _cnt(matched & op.isNotNull()).alias("n_matched"),
-            _cnt(matched & op.isin("put", "update")).alias("n_modified"),
-            _cnt(matched & (op == "delete")).alias("n_removed"),
-            _cnt(matched & (op == "insert")).alias("n_insert_skipped"),
-            _cnt(matched & (op == "put")).alias("n_put_matched"),
-        )
-
-    # The single-pass projection: key, op, pre-image AND merged value per
-    # col.  Materialized to parquet scratch, not the in-memory cache: every
-    # consumer (changelog: pre cols; merge: new cols; key set: key+op) then
-    # reads a column-pruned slice instead of decoding cached nested rows —
-    # array-heavy columns through InMemoryRelation are a known slow path.
-    #
-    # Write-volume discipline (matters most for the shuffle strategy, whose
-    # full-outer join also carries every UNtouched row of the touched
-    # buckets): pre-image columns are nulled for op-NULL carryover rows and
-    # merged-value columns for delete rows — neither slice is ever read
-    # downstream (pre consumers filter op IS NOT NULL; result/delta filter
-    # deletes out), and parquet encodes the nulls as RLE definition levels,
-    # so carryover rows cost ~1x row width instead of 2x.  At a 100 TB /
-    # low-touch-fraction batch that halves the dominant scratch write.
-    combined_plan = joined.select(
+    keys = s.select(_SKEY)
+    if n_keys is not None and n_keys <= BROADCAST_MAX_KEYS:
+        keys = F.broadcast(keys)
+    on = F.col(key) == F.col(_SKEY)
+    untouched = tgt.join(keys, on, "left_anti").withColumn(
+        BUCKET_COL, bucket_expr(key, table.num_buckets)
+    )
+    # every joined row carries an op: the semi pre-filter leaves only target
+    # rows with a source key, and the full outer adds unmatched source rows
+    joined = tgt.join(keys, on, "left_semi").join(s, on, "full_outer")
+    kept = _kept(matched, op)
+    combined = joined.select(
         F.coalesce(F.col(key), F.col(_SKEY)).alias(key),
-        F.col(OP_COL),
+        op,
         matched.alias("__matched"),
-        *[
-            F.when(op.isNotNull(), F.col(c)).alias(f"__pre_{c}")
-            for c in data_cols
-            if c != key
-        ],
-        *[
-            F.when(~op.eqNullSafe("delete"), merged_value(c, matched)).alias(f"__new_{c}")
-            for c in data_cols
-            if c != key
-        ],
+        *[F.when(matched, F.col(c)).alias(f"__pre_{c}") for c in data_cols],
+        *[F.when(kept, merged_value(c)).alias(f"__new_{c}") for c in data_cols],
         *[F.col(f"__c_{c}").alias(f"__{c}") for c in carry_cols],
     )
-    static_metrics["plan_expr_ms"] = int((_time.monotonic() - _t0) * 1000)
-    if materialize_combined:
-        # Materialized mode: one serial join job, every consumer reads the
-        # scratch files.  Right when consumers run SERIALLY (the pre-r5
-        # engine path) or re-read the slice many times (metrics fallbacks).
-        _t1 = _time.monotonic()
-        combined_plan.write.mode("overwrite").option(
-            "compression", "uncompressed"
-        ).parquet(os.path.join(scratch, "combined"))
-        static_metrics["combined_write_ms"] = int((_time.monotonic() - _t1) * 1000)
-        combined = spark.read.schema(combined_plan.schema).parquet(
-            os.path.join(scratch, "combined")
-        )
-    else:
-        # Recompute mode (replay hot path, guide §1.2/§2.4): the changelog
-        # and merge-stage consumers run CONCURRENTLY (pipelined commit), so
-        # re-executing the join inside each consumer's job costs no extra
-        # wall while the serial "write combined + read it back" job — the
-        # bulk of the measured per-batch plan_s — disappears.  Each consumer
-        # column-prunes through this projection (changelog: __pre_*;
-        # merge: __new_*), so the token-transform expressions still run
-        # exactly once, in the merge job.
-        combined = combined_plan
 
-    pre_cols = lambda frame: frame.select(  # noqa: E731
-        F.col(key),
-        F.col(OP_COL),
-        F.col("__matched"),
-        *[F.col(f"__pre_{c}") for c in data_cols if c != key],
-        *[F.col(f"__{c}") for c in carry_cols],
+    m = F.col("__matched")
+
+    preimage = combined.select(
+        key, OP_COL, "__matched",
+        *[f"__pre_{c}" for c in data_cols],
+        *[f"__{c}" for c in carry_cols],
     )
-
-    def new_rows(frame: DataFrame) -> DataFrame:
-        return frame.select(
-            F.col(key), *[F.col(f"__new_{c}").alias(c) for c in data_cols if c != key]
-        )
-
-    if strategy == "broadcast":
-        # untouched rows: second scan, anti-joined against the broadcast key
-        # set — stays bucket-aligned (no shuffle of the carried-over data)
-        untouched = tgt.join(
-            F.broadcast(s.select(_SKEY)), F.col(key) == F.col(_SKEY), "left_anti"
-        ).withColumn(BUCKET_COL, bucket_expr(key, table.num_buckets))
-        changed_kept = new_rows(combined.where(op != "delete"))
-        # matched keys are batch-bounded -> broadcast the anti join for inserts
-        matched_keys = combined.select(F.col(key).alias(_SKEY))
-        unmatched_src = s.join(F.broadcast(matched_keys), _SKEY, "left_anti")
-        inserts_src = unmatched_src.where(op.isin("put", "insert"))
-        # the changed/inserted slice is small: repartition it by bucket so
-        # every write task holds few buckets (bounded file count)
-        changed = (
-            changed_kept.unionByName(src_row(inserts_src))
-            .withColumn(BUCKET_COL, bucket_expr(key, table.num_buckets))
-            .repartition(BUCKET_COL)
-        )
-        result = untouched.unionByName(changed)
-        pre_unmatched = unmatched_src.select(
-            F.col(_SKEY).alias(key),
-            F.col(OP_COL),
-            F.lit(False).alias("__matched"),
-            *[
-                F.lit(None).cast(f.dataType).alias(f"__pre_{f.name}")
-                for f in table.schema.fields
-                if f.name != key
-            ],
-            *[F.col(f"__c_{c}").alias(f"__{c}") for c in carry_cols],
-        )
-        preimage = pre_cols(combined.where(op.isNotNull())).unionByName(pre_unmatched)
-        inserts_frame = inserts_src
-        delta_live = new_rows(combined.where(op.isin("put", "update"))).unionByName(
-            src_row(inserts_src)
-        )
-        delta_dels = combined.where(op == "delete").select(key)
-    elif strategy == "semi":
-        # every combined row carries an op (the semi pre-filter removed the
-        # carryover rows the plain full-outer would drag through): matched
-        # rows, plus unmatched SOURCE rows (inserts).  One joined frame
-        # serves preimage, result, delta and metrics — no second broadcast
-        # build, no matched-key collect.
-        untouched = tgt.join(
-            F.broadcast(s.select(_SKEY)), F.col(key) == F.col(_SKEY), "left_anti"
-        ).withColumn(BUCKET_COL, bucket_expr(key, table.num_buckets))
-        keep = (F.col("__matched") & (op != "delete")) | (
-            ~F.col("__matched") & op.isin("put", "insert")
-        )
-        changed = (
-            new_rows(combined.where(keep))
-            .withColumn(BUCKET_COL, bucket_expr(key, table.num_buckets))
-            .repartition(BUCKET_COL)
-        )
-        result = untouched.unionByName(changed)
-        inserts_frame = combined.where(~F.col("__matched") & op.isin("put", "insert"))
-        # NB: matched 'insert' (insert-if-absent no-op) stays in `result`
-        # (COW rewrites its bucket) but must NOT emit a delta row — a
-        # same-value layer row would surface as a spurious change in the
-        # changefeed diff (cdc_ivm / stream_changefeed contract).
-        delta_live = new_rows(
-            combined.where(
-                (F.col("__matched") & op.isin("put", "update"))
-                | (~F.col("__matched") & op.isin("put", "insert"))
-            )
-        )
-        delta_dels = combined.where(F.col("__matched") & (op == "delete")).select(key)
-        preimage = pre_cols(combined).select(
-            key,
-            OP_COL,
-            "__matched",
-            *[
-                F.when(F.col("__matched"), F.col(f"__pre_{c}")).otherwise(F.lit(None)).alias(f"__pre_{c}")
-                for c in data_cols
-                if c != key
-            ],
-            *[F.col(f"__{c}") for c in carry_cols],
-        )
-    else:
-        inserts_frame = combined.where(~F.col("__matched") & op.isin("put", "insert"))
-        keep = (
-            op.isNull()
-            | (F.col("__matched") & (op != "delete"))
-            | (~F.col("__matched") & op.isin("put", "insert"))
-        )
-        result = new_rows(combined.where(keep))
-        delta_live = new_rows(
-            combined.where(
-                (F.col("__matched") & op.isin("put", "update"))
-                | (~F.col("__matched") & op.isin("put", "insert"))
-            )
-        )
-        delta_dels = combined.where(F.col("__matched") & (op == "delete")).select(key)
-        preimage = pre_cols(combined.where(op.isNotNull())).select(
-            key,
-            OP_COL,
-            "__matched",
-            *[
-                F.when(F.col("__matched"), F.col(f"__pre_{c}")).otherwise(F.lit(None)).alias(f"__pre_{c}")
-                for c in data_cols
-                if c != key
-            ],
-            *[F.col(f"__{c}") for c in carry_cols],
-        )
-
-    if with_observation and not materialize_combined:
-        # recompute mode: an Observation is delivered by the FIRST query that
-        # executes its node, and AQE's empty-relation propagation can
-        # ELIMINATE the node from a consumer whose slice is adaptively empty
-        # (e.g. the merge job of a pure-delete batch), poisoning the metrics
-        # with an empty row.  The preimage covers every source-op row and the
-        # changelog append always executes it in full, so attach there.
+    # The changed slice is repartitioned by bucket BEFORE the result/delta
+    # filters, and the metrics are observed after the exchange: the observe
+    # node then sits in the final stage over a never-empty shuffle (one row
+    # per source key) that every merge — COW result or MoR delta — runs,
+    # and filters cannot move below it.  Observed below an exchange the
+    # filters had emptied (a pure-delete batch), AQE's empty-relation
+    # propagation would prune the node and blank the metrics.
+    changes = combined.withColumn(
+        BUCKET_COL, bucket_expr(key, table.num_buckets)
+    ).repartition(BUCKET_COL)
+    if touched:  # else stage_merge runs nothing and the counters stay 0
         o = Observation("merge-matched")
         observations["matched"] = o
-        pm = F.col("__matched")
-        pop = F.col(OP_COL)
-        preimage = preimage.observe(
+        changes = changes.observe(
             o,
-            _cnt(pm & pop.isNotNull()).alias("n_matched"),
-            _cnt(pm & pop.isin("put", "update")).alias("n_modified"),
-            _cnt(pm & (pop == "delete")).alias("n_removed"),
-            _cnt(pm & (pop == "insert")).alias("n_insert_skipped"),
-            _cnt(pm & (pop == "put")).alias("n_put_matched"),
+            _cnt(m).alias("n_matched"),
+            _cnt(m & op.isin("put", "update")).alias("n_modified"),
+            _cnt(m & (op == "delete")).alias("n_removed"),
+            _cnt(m & (op == "insert")).alias("n_insert_skipped"),
+            _cnt(~m & op.isin("put", "insert")).alias("n_inserted"),
         )
-
+    new_cols = [F.col(f"__new_{c}").alias(c) for c in data_cols]
+    result = untouched.unionByName(
+        changes.where(_kept(m, op)).select(key, *new_cols, BUCKET_COL)
+    )
     # merge-on-read layer: changed/inserted rows live, matched deletes as
-    # key-only tombstones (consumed only when run_merge dispatches to MoR)
-    tomb = delta_dels.select(
-        F.col(key),
-        *[
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in table.schema.fields
-            if f.name != key
-        ],
-    ).withColumn(DELETED_COL, F.lit(True))
-    delta = delta_live.withColumn(DELETED_COL, F.lit(False)).unionByName(tomb)
-
+    # key-only tombstones (their __new_* are NULL).  A matched 'insert'
+    # (insert-if-absent no-op) stays in `result` but emits no delta row — a
+    # same-value layer row would surface as a spurious change in the
+    # changefeed diff (cdc_ivm / stream_changefeed contract).
+    tomb = m & (op == "delete")
+    live = (m & op.isin("put", "update")) | (~m & op.isin("put", "insert"))
+    delta = changes.where(live | tomb).select(
+        key, *new_cols, BUCKET_COL, tomb.alias(DELETED_COL)
+    )
     return MergePlan(
         result=result,
         preimage=preimage,
         touched=touched,
-        strategy=strategy,
-        staged_bytes=staged_bytes,
         delta=delta,
         observations=observations,
-        source=s,
-        combined=combined,
-        inserts_frame=inserts_frame,
         scratch_dir=scratch,
-        result_prepartitioned=(strategy in ("broadcast", "semi")),
         static_metrics=static_metrics,
     )
 
@@ -635,14 +356,14 @@ def stage_merge(
     if not plan.touched:
         return None
     mode = mode or table.snapshot().properties.get("merge_mode", "cow")
+    # both frames are already bucket-organized (see build_merge_plan)
     if mode == "mor":
-        pending = table.stage_append_deltas(plan.delta, plan.touched, operation=operation)
+        pending = table.stage_append_deltas(
+            plan.delta, plan.touched, operation=operation, repartition=False
+        )
     else:
         pending = table.stage_overwrite_buckets(
-            plan.result,
-            plan.touched,
-            operation=operation,
-            repartition=not plan.result_prepartitioned,
+            plan.result, plan.touched, operation=operation, repartition=False
         )
     pending.merge_mode = mode
     return pending

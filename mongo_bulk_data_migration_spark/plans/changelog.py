@@ -41,11 +41,29 @@ _EPOCH = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
 # broadcast the per-key log flags while the pruned changelog holds at most
 # this many rows: the build side is the (key, kind, batch_id) aggregate, so
 # its hash relation costs ~45-60 B/row — 1.5M rows ~ 80 MB, comfortably
-# broadcastable.  Row counts come from the parquet FOOTERS of the pruned
-# file set (driver-side, O(pruned files), bounded by the compaction
-# cadence) — measuring FILE bytes instead would count the multi-KB backup
-# payloads and turn the broadcast off exactly when it matters most.
+# broadcastable.  Row counts are the per-file counts the manifest records
+# at write time, with a parquet footer read only for an entry lacking one
+# (driver-side, no Spark job) — measuring FILE bytes instead would count
+# the multi-KB backup payloads and turn the broadcast off exactly when it
+# matters most.
 LOG_BROADCAST_MAX_ROWS = int(os.environ.get("MBDM_LOG_BCAST_MAX_ROWS", str(1_500_000)))
+
+
+def _file_rows(tbl: LakeTable, files: list[dict]) -> int | None:
+    """Total rows of ``files``: the counts the manifest records at write
+    time (a dict sum), with a footer read only for an entry lacking one
+    (driver-side, no Spark job); ``None`` when a count cannot be read."""
+    try:
+        need_footer = [f for f in files if "rows" not in f]
+        n = sum(f["rows"] for f in files if "rows" in f)
+        if need_footer:
+            import pyarrow.parquet as pq
+
+            for f in need_footer:
+                n += pq.ParquetFile(os.path.join(tbl.root, f["path"])).metadata.num_rows
+        return n
+    except Exception:
+        return None
 
 
 def changelog_schema(data_schema: T.StructType, key_col: str) -> T.StructType:
@@ -69,13 +87,16 @@ def changelog_schema(data_schema: T.StructType, key_col: str) -> T.StructType:
 
 
 class Changelog:
-    """One changelog table per (collection, migration id)."""
+    """One changelog table per (collection, migration id).
+
+    An instance memoizes Column trees, so it belongs to one SparkSession."""
 
     def __init__(self, catalog: Catalog, table_name: str, target: LakeTable, migration_id: str):
         self.catalog = catalog
         self.table_name = table_name
         self.target = target
         self.migration_id = migration_id
+        self._expr_cache: tuple | None = None  # see append_batch
 
     def ensure(self) -> LakeTable:
         if self.catalog.exists(self.table_name):
@@ -160,9 +181,8 @@ class Changelog:
             tuple(sorted(bset)),
             tbl.schema["backup"].dataType.json(),
         )
-        cached = getattr(self, "_expr_cache", None)
-        if cached is not None and cached[0] == expr_key:
-            backup_struct, recs = cached[1]
+        if self._expr_cache is not None and self._expr_cache[0] == expr_key:
+            backup_struct, recs = self._expr_cache[1]
         else:
             backup_struct, recs = self._build_record_exprs(
                 backup_fields, bset, have, preimage.columns, tbl
@@ -189,40 +209,15 @@ class Changelog:
         log, log_rows = self._existing_log(
             spark, base.select(F.col(key)), bucket_hint=bucket_hint
         )
-        is_backup = F.col("kind") == KIND_BACKUP
-        log_agg = log.groupBy(key).agg(
-            # any backup row (any batch, incl. a replay of this one) => not fresh
-            F.max(F.when(is_backup, F.lit(1))).alias("__has_backup"),
-            # backup taken in an EARLIER batch => marker candidates apply
-            # (same-batch replays already carry the op in the backup row)
-            F.max(
-                F.when(is_backup & (F.col("batch_id") < batch_id), F.lit(1))
-            ).alias("__has_earlier"),
-            # exact (key, kind, batch) guards make marker replays no-ops
-            F.max(
-                F.when(
-                    (F.col("kind") == KIND_TOMBSTONE)
-                    & (F.col("batch_id") == batch_id),
-                    F.lit(1),
-                )
-            ).alias("__has_tomb"),
-            F.max(
-                F.when(
-                    (F.col("kind") == KIND_REINSERT)
-                    & (F.col("batch_id") == batch_id),
-                    F.lit(1),
-                )
-            ).alias("__has_reins"),
-        )
-        # Measured-size broadcast (same principle as the merge planner's
-        # auto strategy / MOR_BROADCAST_BYTES): log_agg is a per-key flag
-        # frame whose row count is known from the pruned files' footers.
-        # Broadcasting it keeps the WIDE pre-image rows of `base` map-side
-        # — otherwise the planner sort-merge-joins and shuffles every
-        # multi-KB backup payload just to attach four tiny flags.
-        if log_rows <= LOG_BROADCAST_MAX_ROWS:
-            log_agg = F.broadcast(log_agg)
-        j = base.join(log_agg, key, "left")
+        if log_rows == 0:
+            # nothing logged in these buckets yet (e.g. the first batch): no
+            # key has a flag, so skip the log aggregation and join entirely
+            j = base.select("*", *[
+                F.lit(None).cast("int").alias(c)
+                for c in ("__has_backup", "__has_earlier", "__has_tomb", "__has_reins")
+            ])
+        else:
+            j = self._flag_join(base, log, log_rows, batch_id)
 
         rows = j.select(
             F.col(key),
@@ -260,6 +255,45 @@ class Changelog:
         # eliminated-observe (replayed no-op append) reads as zero fresh
         # backups; any REAL failure propagates (obsutil narrows the catch)
         return int(observed(n_obs).get("n_backups") or 0)
+
+    def _flag_join(
+        self, base: DataFrame, log: DataFrame, log_rows: int, batch_id: int
+    ) -> DataFrame:
+        """Attach the per-key ``__has_*`` log flags to ``base`` (left join)."""
+        key = self.target.key_col
+        is_backup = F.col("kind") == KIND_BACKUP
+        log_agg = log.groupBy(key).agg(
+            # any backup row (any batch, incl. a replay of this one) => not fresh
+            F.max(F.when(is_backup, F.lit(1))).alias("__has_backup"),
+            # backup taken in an EARLIER batch => marker candidates apply
+            # (same-batch replays already carry the op in the backup row)
+            F.max(
+                F.when(is_backup & (F.col("batch_id") < batch_id), F.lit(1))
+            ).alias("__has_earlier"),
+            # exact (key, kind, batch) guards make marker replays no-ops
+            F.max(
+                F.when(
+                    (F.col("kind") == KIND_TOMBSTONE)
+                    & (F.col("batch_id") == batch_id),
+                    F.lit(1),
+                )
+            ).alias("__has_tomb"),
+            F.max(
+                F.when(
+                    (F.col("kind") == KIND_REINSERT)
+                    & (F.col("batch_id") == batch_id),
+                    F.lit(1),
+                )
+            ).alias("__has_reins"),
+        )
+        # Measured-size broadcast (same principle as MOR_BROADCAST_BYTES):
+        # log_agg is a per-key flag frame whose row count the manifest
+        # records.  Broadcasting it keeps the WIDE pre-image rows of `base`
+        # map-side — otherwise the planner sort-merge-joins and shuffles
+        # every multi-KB backup payload just to attach four tiny flags.
+        if log_rows <= LOG_BROADCAST_MAX_ROWS:
+            log_agg = F.broadcast(log_agg)
+        return base.join(log_agg, key, "left")
 
     def _build_record_exprs(self, backup_fields, bset, have, preimage_cols, tbl):
         """Batch-invariant expression trees for :meth:`append_batch`:
@@ -405,20 +439,8 @@ class Changelog:
         snap = tbl.snapshot()
         bset = set(cand_buckets)
         pruned = [f for f in snap.files if f["bucket"] in bset]
-        rows_ = 0
-        try:
-            # manifest-recorded counts (written by _write_data_files) make
-            # this a dict sum; footer reads only for legacy entries
-            need_footer = [f for f in pruned if "rows" not in f]
-            if need_footer:
-                import pyarrow.parquet as pq
-
-                for f in need_footer:
-                    rows_ += pq.ParquetFile(
-                        os.path.join(tbl.root, f["path"])
-                    ).metadata.num_rows
-            rows_ += sum(f["rows"] for f in pruned if "rows" in f)
-        except Exception:
+        rows_ = _file_rows(tbl, pruned)
+        if rows_ is None:
             rows_ = LOG_BROADCAST_MAX_ROWS + 1  # unknown => no broadcast
         existing = tbl.read(spark, buckets=cand_buckets)
         return (
@@ -438,6 +460,12 @@ class Changelog:
         migration ever touched: the rollback merge cannot need to rewrite
         any bucket outside it."""
         return sorted({f["bucket"] for f in self.table().snapshot().files})
+
+    def row_count(self) -> int | None:
+        """Rows in this migration's changelog, from the manifest (``None``
+        when unknown) — an upper bound on the keys its rollback touches."""
+        tbl = self.table()
+        return _file_rows(tbl, tbl.snapshot().files)
 
     def rollback_source(self, spark: SparkSession) -> DataFrame:
         """Build the single-merge rollback source from the changelog.

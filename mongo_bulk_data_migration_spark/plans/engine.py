@@ -155,14 +155,7 @@ class MongoBulkDataMigrationSpark:
                 self.spark,
                 bsrc,
                 update_cols=update_cols,
-                strategy=cfg.options.merge_strategy,
-                broadcast_threshold_bytes=cfg.options.broadcast_threshold_bytes,
                 bypass_validation=cfg.options.bypass_validation,
-                # with the pipelined commit the changelog + merge consumers
-                # run concurrently: recompute the join inside each consumer
-                # instead of paying the serial materialization job (the
-                # metrics fallback stays job-free via the derived counters)
-                materialize_combined=not cfg.options.pipeline_commit,
             )
             try:
                 start_ver = target.current_version()
@@ -211,7 +204,7 @@ class MongoBulkDataMigrationSpark:
                     properties={"writer": cfg.id},
                     operation=op_name,
                 )
-                m = plan.metrics()  # before release(): reads the staged frames
+                m = plan.metrics()
             finally:
                 plan.release()
             m["n_backups"] = max(n_backups, 0)
@@ -426,15 +419,22 @@ class MongoBulkDataMigrationSpark:
         src = cl.rollback_source(self.spark)
         if cfg.rollback is not None:  # M6 custom rollback callback
             src = cfg.rollback(src)
-        backup_cols = self._backup_cols(target)
+        known: dict[str, Any] = {}
+        if cl.table().num_buckets == target.num_buckets:
+            # a changelog with the target's key and bucket count names every
+            # bucket the source can touch in its manifest, and its row count
+            # bounds the key set — no staging job; a callback that moves
+            # keys elsewhere fails the write loudly.  Otherwise (a changelog
+            # kept across a target recreated with other buckets) staging
+            # discovers the buckets.
+            known = {"touched": cl.touched_buckets(), "n_keys": cl.row_count()}
         plan = build_merge_plan(
             target,
             self.spark,
             src,
-            update_cols=backup_cols,
-            strategy=cfg.options.merge_strategy,
-            broadcast_threshold_bytes=cfg.options.broadcast_threshold_bytes,
+            update_cols=self._backup_cols(target),
             bypass_validation=True,  # rollback source comes from our own changelog
+            **known,
         )
         try:
             run_merge(

@@ -48,11 +48,6 @@ class MigrationOptions:
     throttle_ms: int = 0                # B3 sleep between batches
     bypass_validation: bool = False     # validator toggle analog (MBDM.ts:425-449)
     skip_unchanged: bool = False        # P4 NO_UPDATE analog (MBDM.ts:284-286)
-    # 'auto' (default) broadcasts batches whose staged size fits under
-    # broadcast_threshold_bytes and falls back to the shuffle (full-outer
-    # sort-merge) strategy above it; 'broadcast' / 'shuffle' force a path
-    merge_strategy: str = "auto"
-    broadcast_threshold_bytes: int = 64 << 20
     dedup_salt: int | None = None       # extra two-phase salt for hot keys
     # overlap the changelog append with the merge's file writes (manifest
     # commits stay strictly ordered: changelog first — B2 WAL semantics are

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from .laketable import DELETED_COL, DSEQ_COL, LakeTable
+from .laketable import DELETED_COL, DSEQ_COL, LakeTable, empty_frame
 
 CHANGE_COL = "_change_type"
 VERSION_COL = "_commit_version"
@@ -242,7 +242,7 @@ def table_changes(
                 T.StructField(VERSION_COL, T.LongType(), False),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     out = parts[0]
     for p in parts[1:]:
         # schemas can differ across commits (online evolution mid-range)

@@ -52,8 +52,7 @@ DELETED_COL = "__deleted"  # tombstone flag inside merge-on-read delta files
 DSEQ_COL = "__dseq"        # delta layer sequence (later layers win per key)
 # MoR read: when the un-compacted delta layers measure below this, the
 # shadowed-base anti join broadcasts the delta key set instead of letting the
-# planner shuffle TB-scale base buckets (same measured-size principle as the
-# merge planner's auto broadcast/shuffle strategy; AQE only sees estimates).
+# planner shuffle TB-scale base buckets (AQE only sees estimates).
 MOR_BROADCAST_BYTES = 64 << 20
 
 
@@ -66,6 +65,17 @@ def bucket_expr(key_col: str, num_buckets: int):
 # a wider requested schema than the file footer (probed in this environment:
 # int32 file -> long schema, float -> double, and array-element versions).
 _WIDEN_ORDER = {"byte": 0, "short": 1, "integer": 2, "long": 3}
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty frame planned JVM-side (``LocalTableScan``): no tasks.
+    ``spark.createDataFrame([], schema)`` plans ``Scan ExistingRDD`` over
+    ``parallelize([])`` instead, which starts one Python worker per core."""
+    js = spark._jsparkSession
+    return DataFrame(
+        js.createDataFrame(spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json())),
+        spark,
+    )
 
 
 def is_widening(old: T.DataType, new: T.DataType) -> bool:
@@ -333,7 +343,7 @@ class LakeTable:
         base = [f for f in files if f.get("kind", "base") == "base"]
         delta = [f for f in files if f.get("kind") == "delta"]
         if not base and not delta:
-            return spark.createDataFrame([], snap.schema)
+            return empty_frame(spark, snap.schema)
         cols = [f.name for f in snap.schema.fields]
         if not delta:
             paths = [os.path.join(self.root, f["path"]) for f in base]
@@ -450,18 +460,19 @@ class LakeTable:
         # record per-file row counts in the manifest (Iceberg-style): one
         # footer read per file at write time replaces O(pruned files) footer
         # reads on EVERY later metadata consumer (e.g. the changelog
-        # broadcast-bound check each batch). Optional key — readers fall
-        # back to footer reads for entries that lack it.
-        try:
-            import pyarrow.parquet as pq
+        # broadcast-bound check each batch). Optional key per entry —
+        # readers fall back to a footer read for an entry that lacks it, so
+        # one unreadable footer (or a missing pyarrow) costs only that
+        # entry's count, never the commit.
+        for e in entries:
+            try:
+                import pyarrow.parquet as pq
 
-            for e in entries:
                 e["rows"] = pq.ParquetFile(
                     os.path.join(self.root, e["path"])
                 ).metadata.num_rows
-        except Exception:
-            for e in entries:
-                e.pop("rows", None)
+            except Exception:
+                continue
         return entries
 
     def append(

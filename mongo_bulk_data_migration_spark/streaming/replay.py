@@ -239,7 +239,7 @@ class ChangeStreamReplayer:
         write (``__batch=<id>/`` directories), then fold all per-batch stats
         into two whole-window aggregations:
 
-        1. staged stats (per batch): source-key / upsert counts + touched
+        1. staged stats (per batch): source-key counts + touched
            buckets — replaces the per-batch staging Observation;
         2. raw lineage (per batch, part): event count + max seq — replaces
            the per-batch lineage collect, and is EXACT (the collapsed max
@@ -259,7 +259,7 @@ class ChangeStreamReplayer:
         Staging is pure scratch, so crash semantics are unchanged: a resumed
         run re-stages from its own HWM-filtered pending set.
         """
-        from ..operators.merge import _dir_bytes, _prep_source, check_source_types
+        from ..operators.merge import _prep_source, check_source_types
         from ..sources.laketable import BUCKET_COL
 
         sc = self.spark.sparkContext
@@ -329,9 +329,6 @@ class ChangeStreamReplayer:
             staged_all = self.spark.read.schema(prepped.schema).parquet(out_dir)
             srows = staged_all.groupBy("__batch").agg(
                 F.count(F.lit(1)).alias("n_source_keys"),
-                F.sum(
-                    F.when(F.col(OP_COL).isin("put", "insert"), 1).otherwise(0)
-                ).alias("n_src_upserts"),
                 F.collect_set(F.col(BUCKET_COL)).alias("touched"),
             ).collect()
         finally:
@@ -364,8 +361,7 @@ class ChangeStreamReplayer:
                 "path": None,  # set below iff the batch staged any rows
                 "schema": batch_schema,
                 "touched": [],
-                "staged_bytes": 0,
-                "static_metrics": {"n_source_keys": 0, "n_src_upserts": 0},
+                "static_metrics": {"n_source_keys": 0},
                 "part_hwm": {},
                 "n_events": 0,
                 "n_dead": 0,
@@ -378,15 +374,10 @@ class ChangeStreamReplayer:
             st = stats.get(int(r["__batch"]))
             if st is None:
                 continue  # unreachable: staged rows derive from pending
-            bdir = os.path.join(out_dir, f"__batch={int(r['__batch'])}")
             st.update(
-                path=bdir,
+                path=os.path.join(out_dir, f"__batch={int(r['__batch'])}"),
                 touched=sorted(int(x) for x in (r["touched"] or [])),
-                staged_bytes=_dir_bytes(bdir),
-                static_metrics={
-                    "n_source_keys": int(r["n_source_keys"]),
-                    "n_src_upserts": int(r["n_src_upserts"]),
-                },
+                static_metrics={"n_source_keys": int(r["n_source_keys"])},
             )
         return stats
 
@@ -515,15 +506,10 @@ class ChangeStreamReplayer:
             self.spark,
             src,
             update_cols=plan_exprs[0],
-            strategy=cfg.options.merge_strategy,
-            broadcast_threshold_bytes=cfg.options.broadcast_threshold_bytes,
             carry_cols=["seq", "transform", "part"],
             value_exprs=plan_exprs[1],
             bypass_validation=cfg.options.bypass_validation,
             prestaged=pre,
-            # pipelined commit runs the changelog + merge consumers
-            # concurrently: recompute beats the serial materialize job
-            materialize_combined=False,
         )
         t_plan = time.monotonic() - t1
         max_seq = max(part_hwm.values())
@@ -615,8 +601,6 @@ class ChangeStreamReplayer:
             )
             t_merge = time.monotonic() - t3
             merge_metrics = plan.metrics()
-            merge_metrics["strategy"] = plan.strategy
-            merge_metrics["staged_bytes"] = plan.staged_bytes
         finally:
             plan.release()
 

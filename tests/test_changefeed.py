@@ -11,7 +11,6 @@ from mongo_bulk_data_migration_spark.operators.ivm import (
     init_grouped_agg,
     maintain,
 )
-from mongo_bulk_data_migration_spark.plans.migration import MigrationOptions
 from mongo_bulk_data_migration_spark.sources.changefeed import (
     CHANGE_COL,
     table_changes,
@@ -45,7 +44,6 @@ def _replay_and_check(spark, warehouse, mode):
     events = changes_df(spark, 400, 1600, n_parts=4, parallelism=4)
     rep = ChangeStreamReplayer(
         spark, warehouse, "sequences", f"cf-{mode}", evolve_schema=False,
-        options=MigrationOptions(merge_strategy="auto"),
     )
     rep.apply_changes(events, events_per_batch=400)  # 4 commits
     if mode == "mor":
@@ -118,7 +116,6 @@ def test_follow_changes_tails_incrementally(spark, warehouse):
     events = changes_df(spark, 100, 400, n_parts=2, parallelism=2)
     rep = ChangeStreamReplayer(
         spark, warehouse, "sequences", "cf-tail", evolve_schema=False,
-        options=MigrationOptions(merge_strategy="auto"),
     )
     rep.apply_changes(events, events_per_batch=200)  # 2 commits land
 
@@ -148,7 +145,6 @@ def test_column_projected_feed(spark, warehouse):
     events = changes_df(spark, 60, 240, n_parts=2, parallelism=2)
     rep = ChangeStreamReplayer(
         spark, warehouse, "sequences", "cf-proj", evolve_schema=False,
-        options=MigrationOptions(merge_strategy="auto"),
     )
     rep.apply_changes(events, events_per_batch=120)
 
@@ -184,7 +180,6 @@ def test_materialized_view_checkpointed_restart(spark, warehouse, tmp_path):
     events = changes_df(spark, 200, 800, n_parts=2, parallelism=2)
     rep = ChangeStreamReplayer(
         spark, warehouse, "sequences", "mv-restart", evolve_schema=False,
-        options=MigrationOptions(merge_strategy="auto"),
     )
     rep.apply_changes(events, events_per_batch=200, max_batches=2)  # 2 commits
 

@@ -29,6 +29,47 @@ def test_create_append_read(spark, warehouse):
     assert t.current_version() == 1
 
 
+def test_empty_read_plans_no_python_scan(spark, warehouse):
+    """An empty table (or an empty change range) is a JVM-side empty
+    relation: no `Scan ExistingRDD` over `parallelize([])`, which would start
+    a Python worker per core for zero rows."""
+    from mongo_bulk_data_migration_spark.sources.changefeed import table_changes
+
+    t = Catalog(warehouse).create_table("seq", SEQUENCES_SCHEMA, num_buckets=4)
+    v = t.current_version()
+    for df in (t.read(spark), t.read(spark, buckets=[]), table_changes(t, spark, v)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan and "LocalTableScan" in plan
+        assert df.count() == 0
+    assert t.read(spark).schema == t.schema
+
+
+def test_manifest_row_counts_survive_one_failed_footer(spark, warehouse, monkeypatch):
+    """A footer read that fails at write time, with any error, drops only
+    that entry's manifest row count; every other entry keeps its count."""
+    import pyarrow.parquet as pq
+
+    real = pq.ParquetFile
+    calls = []
+
+    def flaky(path, *a, **k):
+        calls.append(path)
+        if len(calls) == 1:
+            # pyarrow's ArrowNotImplementedError is a NotImplementedError
+            raise NotImplementedError("unsupported footer")
+        return real(path, *a, **k)
+
+    t = Catalog(warehouse).create_table("seq", SEQUENCES_SCHEMA, num_buckets=4)
+    monkeypatch.setattr(pq, "ParquetFile", flaky)
+    t.append(sequences_spark(spark, 40))
+    files = t.snapshot().files
+    assert len(files) == len(calls) > 1
+    assert sum("rows" not in f for f in files) == 1
+    assert sum(f.get("rows", 0) for f in files) == 40 - real(
+        f"{t.root}/{next(f['path'] for f in files if 'rows' not in f)}"
+    ).metadata.num_rows
+
+
 def test_bucket_pruning_reads_subset(spark, warehouse):
     cat = Catalog(warehouse)
     t = cat.create_table("seq", SEQUENCES_SCHEMA, num_buckets=8)

@@ -1,5 +1,5 @@
 """MERGE operator semantics: put/update/insert/delete × matched/unmatched,
-both physical strategies, pre-image correctness.
+under every join-selection regime, pre-image correctness.
 
 The op matrix mirrors the reference's bulk surface: keyed update
 (`MigrationBulk.ts:36`), delete (`MigrationBulk.ts:47-50`), insert-if-absent
@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mongo_bulk_data_migration_spark import Catalog
+from mongo_bulk_data_migration_spark.operators import merge
 from mongo_bulk_data_migration_spark.operators.merge import build_merge_plan, run_merge
 from mongo_bulk_data_migration_spark.sources.fixtures import (
     CHANGES_SCHEMA,
@@ -32,9 +33,47 @@ def src_df(spark, rows):
     return spark.createDataFrame(rows, schema)
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "semi", "shuffle"])
-def test_merge_op_matrix(spark, warehouse, strategy):
-    t = make_table(spark, warehouse + strategy)
+# Spark's physical choice for the plan's unhinted joins (the target x source
+# full outer, the semi/anti filters) depends on session conf; the single
+# merge plan must give the same rows and metrics under each regime.
+JOIN_REGIMES = {
+    # small sides broadcast freely; AQE turns the full outer into a
+    # shuffled hash join
+    "broadcast": {
+        "spark.sql.autoBroadcastJoinThreshold": str(64 << 20),
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": str(64 << 20),
+    },
+    # the session default: only the plan's own key-set broadcast hint
+    "semi": {},
+    # static plan, no broadcast at all (the key set is also past the
+    # plan's BROADCAST_MAX_KEYS cap): every join is a sort-merge over a
+    # shuffle and AQE never re-plans a stage
+    "shuffle": {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.join.preferSortMergeJoin": "true",
+        "spark.sql.adaptive.enabled": "false",
+    },
+}
+
+
+@pytest.fixture(params=list(JOIN_REGIMES))
+def join_regime(request, spark, monkeypatch):
+    if request.param == "shuffle":
+        monkeypatch.setattr(merge, "BROADCAST_MAX_KEYS", 0)
+    saved = {k: spark.conf.get(k, None) for k in JOIN_REGIMES[request.param]}
+    for k, v in JOIN_REGIMES[request.param].items():
+        spark.conf.set(k, v)
+    yield request.param
+    for k, v in saved.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def test_merge_op_matrix(spark, warehouse, join_regime):
+    t = make_table(spark, warehouse + join_regime)
     before = {r["doc_id"]: r for r in rows_of(t.read(spark))}
 
     rows = [
@@ -47,9 +86,7 @@ def test_merge_op_matrix(spark, warehouse, strategy):
         ("doc00000004", "delete", None, None, None),            # remove
         ("doc99999004", "delete", None, None, None),            # no-op
     ]
-    plan = build_merge_plan(
-        t, spark, src_df(spark, rows), update_cols=["tokens", "n_tok"], strategy=strategy
-    )
+    plan = build_merge_plan(t, spark, src_df(spark, rows), update_cols=["tokens", "n_tok"])
     pre = rows_of(plan.preimage)
     run_merge(t, plan)
     m = plan.metrics()
@@ -91,10 +128,9 @@ def test_merge_op_matrix(spark, warehouse, strategy):
     assert pre_by_key["doc99999001"]["__pre_tokens"] is None
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "semi", "shuffle"])
-def test_merge_value_exprs_compute_from_target(spark, warehouse, strategy):
+def test_merge_value_exprs_compute_from_target(spark, warehouse, join_regime):
     """Transforms evaluated inside the join: new value = f(target row, event)."""
-    t = make_table(spark, warehouse + strategy, n=20)
+    t = make_table(spark, warehouse + join_regime, n=20)
     before = {r["doc_id"]: r for r in rows_of(t.read(spark))}
     rows = [("doc00000005", "update", None, None, None)]
     plan = build_merge_plan(
@@ -102,7 +138,6 @@ def test_merge_value_exprs_compute_from_target(spark, warehouse, strategy):
         spark,
         src_df(spark, rows),
         update_cols=["tokens", "n_tok"],
-        strategy=strategy,
         value_exprs={
             "tokens": F.concat(F.col("tokens"), F.array(F.lit(50256).cast("int"))),
             "n_tok": (F.size("tokens") + 1).cast("int"),
@@ -129,49 +164,6 @@ def test_merge_untouched_buckets_not_rewritten(spark, warehouse):
     carried = files_before & files_after
     # all buckets except the single touched one carried over by reference
     assert len(carried) >= len(files_before) - 2
-
-
-def test_merge_auto_strategy_by_staged_size(spark, warehouse):
-    """'auto' broadcasts small batches and falls back to shuffle when the
-    staged source exceeds the threshold (the 100-TB guard: never broadcast a
-    multi-GB batch). Results must be identical either way."""
-    t = make_table(spark, warehouse, n=30)
-    rows = [("doc00000001", "put", [9, 9], 2, "x"), ("doc99999001", "put", [1], 1, "y")]
-
-    plan = build_merge_plan(t, spark, src_df(spark, rows), strategy="auto")
-    assert plan.strategy == "broadcast" and plan.staged_bytes > 0
-    plan.release()
-
-    plan2 = build_merge_plan(
-        t, spark, src_df(spark, rows), strategy="auto", broadcast_threshold_bytes=1
-    )
-    # past the payload-broadcast bound, the key set (2 keys) is still tiny:
-    # auto picks the key-broadcast semi strategy
-    assert plan2.strategy == "semi"
-    run_merge(t, plan2)
-    plan2.release()
-    after = {r["doc_id"]: r for r in rows_of(t.read(spark))}
-    assert after["doc00000001"]["tokens"] == [9, 9]
-    assert after["doc99999001"]["tokens"] == [1]
-
-
-def test_merge_auto_shuffle_fallback_past_key_cap(spark, warehouse, monkeypatch):
-    """When even the key set is too large to broadcast, 'auto' falls back to
-    the plain full-outer shuffle join (no driver-side build at all)."""
-    import mongo_bulk_data_migration_spark.operators.merge as M
-
-    t = make_table(spark, warehouse, n=30)
-    rows = [("doc00000001", "put", [9, 9], 2, "x"), ("doc99999001", "put", [1], 1, "y")]
-    monkeypatch.setattr(M, "SEMI_MAX_KEYS", 1)
-    plan = build_merge_plan(
-        t, spark, src_df(spark, rows), strategy="auto", broadcast_threshold_bytes=1
-    )
-    assert plan.strategy == "shuffle"
-    run_merge(t, plan)
-    plan.release()
-    after = {r["doc_id"]: r for r in rows_of(t.read(spark))}
-    assert after["doc00000001"]["tokens"] == [9, 9]
-    assert after["doc99999001"]["tokens"] == [1]
 
 
 def test_merge_on_read_op_matrix(spark, warehouse):
@@ -237,38 +229,3 @@ def test_merge_on_read_op_matrix(spark, warehouse):
     assert t.delta_layers() == 0
     after_c = sorted((r["doc_id"], tuple(r["tokens"] or [])) for r in rows_of(t.read(spark)))
     assert after_c == before
-
-
-def test_combined_scratch_nulls_unread_slices(spark, warehouse):
-    """Write-volume contract of the single-pass combined staging: pre-image
-    columns are NULL for op-NULL carryover rows (shuffle full-outer join) and
-    merged-value columns are NULL for delete rows — those slices are never
-    read downstream, and nulling keeps the dominant scratch write at ~1x row
-    width for untouched rows instead of 2x (the 100 TB discipline)."""
-    t = make_table(spark, warehouse, n=20, buckets=1)  # 1 bucket: all carried rows join in
-    rows = [
-        ("doc00000001", "update", [7], 1, None),
-        ("doc00000002", "delete", None, None, None),
-    ]
-    plan = build_merge_plan(
-        t, spark, src_df(spark, rows), update_cols=["tokens", "n_tok"], strategy="shuffle"
-    )
-    combined = {r["doc_id"]: r for r in rows_of(plan.combined)}
-    # carryover row (no event): merged value kept, pre-image nulled
-    carry = combined["doc00000003"]
-    assert carry["__op"] is None
-    assert carry["__pre_tokens"] is None and carry["__pre_n_tok"] is None
-    assert carry["__new_tokens"] is not None
-    # delete row: pre-image kept (changelog reads it), merged value nulled
-    dele = combined["doc00000002"]
-    assert dele["__pre_tokens"] is not None
-    assert dele["__new_tokens"] is None and dele["__new_n_tok"] is None
-    # updated row keeps both
-    upd = combined["doc00000001"]
-    assert upd["__pre_tokens"] is not None and upd["__new_tokens"] == [7]
-    run_merge(t, plan)
-    plan.release()
-    after = {r["doc_id"]: r for r in rows_of(t.read(spark))}
-    assert after["doc00000003"]["tokens"] is not None  # carryover survived
-    assert "doc00000002" not in after
-    assert after["doc00000001"]["tokens"] == [7]
