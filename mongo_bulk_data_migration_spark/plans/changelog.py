@@ -49,23 +49,6 @@ _EPOCH = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
 LOG_BROADCAST_MAX_ROWS = int(os.environ.get("MBDM_LOG_BCAST_MAX_ROWS", str(1_500_000)))
 
 
-def _file_rows(tbl: LakeTable, files: list[dict]) -> int | None:
-    """Total rows of ``files``: the counts the manifest records at write
-    time (a dict sum), with a footer read only for an entry lacking one
-    (driver-side, no Spark job); ``None`` when a count cannot be read."""
-    try:
-        need_footer = [f for f in files if "rows" not in f]
-        n = sum(f["rows"] for f in files if "rows" in f)
-        if need_footer:
-            import pyarrow.parquet as pq
-
-            for f in need_footer:
-                n += pq.ParquetFile(os.path.join(tbl.root, f["path"])).metadata.num_rows
-        return n
-    except Exception:
-        return None
-
-
 def changelog_schema(data_schema: T.StructType, key_col: str) -> T.StructType:
     backup_fields = [
         T.StructField(f.name, f.dataType, True) for f in data_schema.fields if f.name != key_col
@@ -439,7 +422,7 @@ class Changelog:
         snap = tbl.snapshot()
         bset = set(cand_buckets)
         pruned = [f for f in snap.files if f["bucket"] in bset]
-        rows_ = _file_rows(tbl, pruned)
+        rows_ = tbl.file_rows(pruned)
         if rows_ is None:
             rows_ = LOG_BROADCAST_MAX_ROWS + 1  # unknown => no broadcast
         existing = tbl.read(spark, buckets=cand_buckets)
@@ -461,11 +444,24 @@ class Changelog:
         any bucket outside it."""
         return sorted({f["bucket"] for f in self.table().snapshot().files})
 
+    def keys(self, spark: SparkSession, buckets: list[int]) -> DataFrame:
+        """Every key this migration logged in the target's ``buckets``: a
+        bucket-pruned read of the key column (the whole log when the
+        changelog is bucketed differently from the target)."""
+        tbl = self.table()
+        if tbl.num_buckets != self.target.num_buckets:
+            buckets = None
+        return (
+            tbl.read(spark, buckets=buckets)
+            .where(F.col("migration_id") == self.migration_id)
+            .select(self.target.key_col)
+        )
+
     def row_count(self) -> int | None:
         """Rows in this migration's changelog, from the manifest (``None``
         when unknown) — an upper bound on the keys its rollback touches."""
         tbl = self.table()
-        return _file_rows(tbl, tbl.snapshot().files)
+        return tbl.file_rows(tbl.snapshot().files)
 
     def rollback_source(self, spark: SparkSession) -> DataFrame:
         """Build the single-merge rollback source from the changelog.

@@ -4,9 +4,13 @@ Mirrors ``MongoBulkDataMigration`` (``/root/reference/src/MongoBulkDataMigration
 
     update()    §3.1  — scan + filter + project, vectorized transform,
                         backup-before-write changelog append, MERGE commit
-    rollback()  §3.2  — snapshot time-travel fast path, else changelog replay
-                        (single restore MERGE: no-resurrect updates, re-insert
-                        deletes, delete inserts); idempotent second call
+    rollback()  §3.2  — snapshot time travel when every foreign commit since
+                        migration start is a pure append of keys this
+                        migration never logged (one forward commit: the start
+                        snapshot's files + those appended files, no data
+                        job), else changelog replay (single restore MERGE:
+                        no-resurrect updates, re-insert deletes, delete
+                        inserts); idempotent second call
     clean()     §3.3  — drop changelog + resume state, tolerate absence
     DELETE_COLLECTION — atomic table-rename swap (update/rollback pair,
                         ``MBDM.ts:129-135,351-357``)
@@ -27,9 +31,9 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators.merge import (
-    OP_COL, build_merge_plan, commit_merge, run_merge, stage_merge)
+    BROADCAST_MAX_KEYS, OP_COL, build_merge_plan, commit_merge, run_merge, stage_merge)
 from ..sources.catalog import Catalog
-from ..sources.laketable import LakeTable
+from ..sources.laketable import MAX_COMMIT_RETRIES, CommitConflictError, LakeTable
 from .changelog import Changelog
 from .hwm import HwmStore
 from .metrics import MetricsSink
@@ -65,9 +69,10 @@ class MongoBulkDataMigrationSpark:
         key = target.key_col
         cols = self.config.projection or [f.name for f in target.schema.fields if f.name != key]
         cols = [c for c in cols if c != key]
-        pbf = self.config.options.projection_backup_filter
-        if pbf is not None:  # P2: back up a subset of the projection
-            cols = [c for c in cols if c in pbf]
+        opts = self.config.options
+        for subset in (opts.projection_backup_filter, opts.cdc_backup_cols):
+            if subset is not None:  # P2 / its replayer analog: a subset
+                cols = [c for c in cols if c in subset]
         return cols
 
     def _resolve_query(self, target: LakeTable, df: DataFrame) -> DataFrame:
@@ -404,18 +409,30 @@ class MongoBulkDataMigrationSpark:
             log.warning("rollback: no changelog for %s — no-op", cfg.id)
             return BulkOperationResult(ok=1).as_dict()
 
+        t0 = time.monotonic()
         target = self.get_collection()
+        cl = self._changelog(target)
         res = BulkOperationResult()
 
         # M6: a custom rollback callback rewrites the restore set per key —
         # whole-table time travel would silently ignore it, so the fast path
         # is only legal for the default inverse
-        if cfg.rollback is None and self._try_snapshot_rollback(target):
-            self.clean()
-            res.batches.append({"mode": "snapshot-time-travel"})
-            return res.as_dict()
+        if cfg.rollback is not None:
+            m = {"mode": "changelog", "fallback": "rollback-callback"}
+        else:
+            m = self._try_snapshot_rollback(target, cl)
+        if m["mode"] == "changelog":
+            m.update(self._changelog_rollback(target, cl))
+        m["migration_id"] = cfg.id
+        m["wall_s"] = round(time.monotonic() - t0, 3)
+        res.fold(m)
+        MetricsSink(cfg.warehouse, cfg.id).emit(m)
+        self.clean()  # reference drops the backup collection at rollback end (:405)
+        return res.as_dict()
 
-        cl = self._changelog(target)
+    def _changelog_rollback(self, target: LakeTable, cl: Changelog) -> dict[str, Any]:
+        """One restore MERGE of the changelog's rollback source."""
+        cfg = self.config
         src = cl.rollback_source(self.spark)
         if cfg.rollback is not None:  # M6 custom rollback callback
             src = cfg.rollback(src)
@@ -443,36 +460,88 @@ class MongoBulkDataMigrationSpark:
                 operation=f"rollback-{cfg.id}",
                 properties={"writer": cfg.id},
             )
-            m = plan.metrics()
+            return plan.metrics()
         finally:
             plan.release()
-        res.fold(m)
-        self.clean()  # reference drops the backup collection at rollback end (:405)
-        return res.as_dict()
 
-    def _try_snapshot_rollback(self, target: LakeTable) -> bool:
-        """Whole-table time travel when every snapshot since migration start
-        was written by this migration (no interleaved foreign writes)."""
-        props = target.snapshot().properties
-        start = props.get(f"migration_start_{self.config.id}")
-        if start is None:
-            return False
-        try:
-            v = target.current_version()
-            while v is not None and v != start:
-                snap = target.snapshot(v)
-                writer = snap.properties.get("writer")
-                if snap.operation not in ("migration-start",) and writer != self.config.id:
-                    return False
-                v = snap.parent
-            if v != start:
-                return False
-            target.rollback_to_snapshot(start)
-        except FileNotFoundError:
-            # expire_snapshots may have removed an intermediate/start
-            # manifest — fall back to the changelog-replay path
-            return False
-        return True
+    def _try_snapshot_rollback(self, target: LakeTable, cl: Changelog) -> dict[str, Any]:
+        """Time travel through foreign appends: restore the migration-start
+        snapshot's files plus the files of every foreign pure append since
+        then, in ONE forward commit (no data job).
+
+        Legal only when the result equals the changelog restore: the backup
+        covers every column the migration can write, every foreign commit
+        on the walk from the head back to the start is a pure append (see
+        ``Snapshot.appended_files``), and no appended key is one this
+        migration logged (a foreign re-insert of a key it deleted must not
+        be duplicated).  Returns the rollback's batch entry — the commit
+        made, or ``mode='changelog'`` with the reason time travel does not
+        apply."""
+        cfg = self.config
+
+        def fallback(reason: str, **kw: Any) -> dict[str, Any]:
+            return {"mode": "changelog", "fallback": reason, **kw}
+
+        key = target.key_col
+        if not {f.name for f in target.schema.fields if f.name != key} <= set(
+            self._backup_cols(target)
+        ):
+            # a narrowed backup restores only its columns; time travel
+            # would restore the others too
+            return fallback("narrowed-backup")
+        for _ in range(MAX_COMMIT_RETRIES):
+            try:
+                head = target.snapshot()
+                start = head.properties.get(f"migration_start_{cfg.id}")
+                if start is None:
+                    return fallback("no-migration-start")
+                picks: list[dict[str, Any]] = []
+                snap = head
+                while snap.version > start:  # manifests only
+                    parent = target.snapshot(snap.parent)
+                    if snap.operation != "migration-start" and snap.properties.get("writer") != cfg.id:
+                        added = snap.appended_files(parent)
+                        if added is None:
+                            return fallback("foreign-commit", foreign_version=snap.version)
+                        picks = added + picks
+                    snap = parent
+                if snap.version != start:
+                    return fallback("start-not-in-lineage")
+            except FileNotFoundError:
+                # expire_snapshots removed a manifest on the walk
+                return fallback("expired-snapshot")
+            if picks and self._appends_touch_changelog(target, cl, picks):
+                return fallback("appended-key-touched")
+            try:
+                version = target.rollback_to_snapshot(
+                    start,
+                    cherry_pick=picks,
+                    head=head.version,
+                    operation=f"rollback-{cfg.id}",
+                    properties={"writer": cfg.id},
+                )
+            except CommitConflictError:
+                continue  # the head moved after the walk: decide again
+            except FileNotFoundError:
+                return fallback("expired-snapshot")
+            return {"mode": "snapshot-time-travel", "cherry_picked_files": len(picks),
+                    "version": version}
+        return fallback("commit-race")
+
+    def _appends_touch_changelog(
+        self, target: LakeTable, cl: Changelog, files: list[dict[str, Any]]
+    ) -> bool:
+        """Does any key in the appended ``files`` appear in this migration's
+        changelog?  One bucket-pruned semi join, stopped at the first hit;
+        the appended key set is broadcast when its manifest row count is
+        within ``BROADCAST_MAX_KEYS``."""
+        key = target.key_col
+        appended = target.read_files(self.spark, files).select(key)
+        n = target.file_rows(files)
+        if n is not None and n <= BROADCAST_MAX_KEYS:
+            appended = F.broadcast(appended)
+        logged = cl.keys(self.spark, sorted({f["bucket"] for f in files}))
+        return bool(logged.join(appended, key, "left_semi").limit(1).collect())
 
     # ------------------------------------------------------------------
     # clean()  (§3.3)

@@ -29,7 +29,8 @@ class MetricsSink:
             f.write(json.dumps(row, sort_keys=True) + "\n")
         # idempotence warning (B6): backups below modified rows means a key
         # was already backed up => the migration re-touched a document.
-        if row.get("n_backups", 0) < row.get("n_modified", 0) + row.get("n_removed", 0):
+        # Rollback rows take no backups and carry no count.
+        if "n_backups" in row and row["n_backups"] < row.get("n_modified", 0) + row.get("n_removed", 0):
             log.warning(
                 "migration %s batch %s: backups (%s) < writes (%s) — "
                 "document(s) updated more than once; rollback restores the "

@@ -17,10 +17,13 @@ Design points (all chosen for the 100 TB / 10^10-event design target):
   ``pmod(xxhash64(key), num_buckets)``.  A MERGE that touches only a few
   keys rewrites only the touched buckets (copy-on-write with partition
   pruning); untouched files are carried into the new snapshot by reference.
-- **Atomic commits + time travel.** A snapshot is a single JSON rename;
-  ``rollback_to_snapshot`` is a pointer move — the analog of the reference's
-  atomic ``renameCollection`` swap
-  (``/root/reference/src/MongoBulkDataMigration.ts:451-459``).
+- **Atomic commits + time travel.** A snapshot is a single JSON create;
+  ``CURRENT`` only moves forward.  ``rollback_to_snapshot`` restores an old
+  snapshot's files (plus any later pure appends the caller cherry-picks) as
+  ONE new forward commit, parented on the head it read — readers and
+  streaming consumers see an ordinary commit whose delta record lists the
+  rolled-back files as removed, and a commit that lands meanwhile fails the
+  restore instead of being dropped.
 - **Schema evolution.** The manifest owns the schema; readers pass it to the
   parquet scan explicitly, so columns added later read back as NULL from old
   files (Iceberg-style add-column without rewrite).
@@ -115,6 +118,25 @@ class Snapshot:
             }
         )
 
+    def appended_files(self, parent: "Snapshot") -> list[dict[str, Any]] | None:
+        """The files this snapshot appended on ``parent`` when it is a PURE
+        append — it removes no file, adds at least one, all base files, and
+        keeps the schema, the ``applied`` markers and every property but
+        ``writer``; otherwise None.  A pure append commutes with any rewrite
+        of other keys, so it can be cherry-picked onto an older snapshot."""
+        before = {f["path"] for f in parent.files}
+        added = [f for f in self.files if f["path"] not in before]
+        if (
+            not added
+            or len(self.files) - len(added) != len(before)
+            or any(f.get("kind", "base") != "base" for f in added)
+            or self.schema != parent.schema
+            or self.applied != parent.applied
+            or _inherited(self.properties) != _inherited(parent.properties)
+        ):
+            return None
+        return added
+
     @staticmethod
     def from_json(s: str) -> "Snapshot":
         d = json.loads(s)
@@ -129,6 +151,13 @@ class Snapshot:
             applied=d.get("applied", {}),
             operation=d.get("operation", "append"),
         )
+
+
+def _inherited(properties: dict[str, Any]) -> dict[str, Any]:
+    """The properties a new commit inherits: all but the per-commit
+    ``writer`` identity (a foreign commit must not look like it was written
+    by the previous committer)."""
+    return {k: v for k, v in properties.items() if k != "writer"}
 
 
 def _atomic_write(path: str, content: str) -> None:
@@ -285,12 +314,8 @@ class LakeTable:
 
     def _next_snapshot(self, operation: str) -> Snapshot:
         cur = self.snapshot()
-        # new version = max existing + 1 so rollback_to_snapshot never collides
+        # new version = max existing + 1: never reuse a version number
         nxt = self.history()[-1] + 1
-        props = dict(cur.properties)
-        # per-commit identity is NOT inherited (a foreign commit must not look
-        # like it was written by the previous committer)
-        props.pop("writer", None)
         return Snapshot(
             version=nxt,
             parent=cur.version,
@@ -298,7 +323,7 @@ class LakeTable:
             key_col=cur.key_col,
             num_buckets=cur.num_buckets,
             files=list(cur.files),
-            properties=props,
+            properties=_inherited(cur.properties),
             applied=json.loads(json.dumps(cur.applied)),
             operation=operation,
         )
@@ -346,8 +371,7 @@ class LakeTable:
             return empty_frame(spark, snap.schema)
         cols = [f.name for f in snap.schema.fields]
         if not delta:
-            paths = [os.path.join(self.root, f["path"]) for f in base]
-            return spark.read.schema(snap.schema).parquet(*paths)
+            return self.read_files(spark, base, snap.schema)
 
         key = snap.key_col
         delta_schema = T.StructType(
@@ -370,9 +394,7 @@ class LakeTable:
         shadowed = [f for f in base if f["bucket"] in delta_buckets]
         parts = []
         if shadowed:
-            sb = spark.read.schema(snap.schema).parquet(
-                *[os.path.join(self.root, f["path"]) for f in shadowed]
-            )
+            sb = self.read_files(spark, shadowed, snap.schema)
             anti_keys = winners.select(key)
             try:
                 delta_bytes = sum(
@@ -391,12 +413,34 @@ class LakeTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         if plain:
-            out = out.unionByName(
-                spark.read.schema(snap.schema).parquet(
-                    *[os.path.join(self.root, f["path"]) for f in plain]
-                )
-            )
+            out = out.unionByName(self.read_files(spark, plain, snap.schema))
         return out
+
+    def read_files(
+        self, spark: SparkSession, files: list[dict[str, Any]], schema: T.StructType | None = None
+    ) -> DataFrame:
+        """Scan exactly the listed base-file manifest entries (no merge-on-
+        read resolution) with ``schema`` (default: the current schema)."""
+        return spark.read.schema(schema or self.schema).parquet(
+            *[os.path.join(self.root, f["path"]) for f in files]
+        )
+
+    def file_rows(self, files: list[dict[str, Any]]) -> int | None:
+        """Total rows of the listed manifest entries: the counts recorded at
+        write time (a dict sum), with a parquet footer read only for an
+        entry lacking one (driver-side, no Spark job); ``None`` when a count
+        cannot be read."""
+        try:
+            n = sum(f["rows"] for f in files if "rows" in f)
+            need_footer = [f for f in files if "rows" not in f]
+            if need_footer:
+                import pyarrow.parquet as pq
+
+                for f in need_footer:
+                    n += pq.ParquetFile(os.path.join(self.root, f["path"])).metadata.num_rows
+            return n
+        except Exception:
+            return None
 
     def applied_marker(self, migration_id: str) -> dict[str, Any] | None:
         return self.snapshot().applied.get(migration_id)
@@ -697,11 +741,45 @@ class LakeTable:
             return snap.version
         raise KeyError(f"no such column: {name}")
 
-    def rollback_to_snapshot(self, version: int) -> None:
-        """Time-travel pointer move — atomic whole-table rollback."""
-        if not os.path.exists(self._snap_path(version)):
-            raise FileNotFoundError(f"no snapshot {version}")
-        _atomic_write(os.path.join(self.root, META_DIR, "CURRENT"), str(version))
+    def rollback_to_snapshot(
+        self,
+        version: int,
+        cherry_pick: Iterable[dict[str, Any]] = (),
+        head: int | None = None,
+        operation: str = "rollback",
+        properties: dict[str, Any] | None = None,
+    ) -> int:
+        """Time travel as ONE forward commit: snapshot ``version``'s schema,
+        files, markers and properties, plus the ``cherry_pick`` manifest
+        entries (files that later pure appends added), committed as a new
+        snapshot parented on ``head`` (default: the current version).
+
+        No data is read or written.  The commit's delta record lists every
+        file the rolled-back commits wrote as removed.  Raises
+        ``FileNotFoundError`` when ``version`` was expired and
+        ``CommitConflictError`` when the table moved past ``head`` (or a
+        commit to it is in flight): the caller re-decides against the new
+        head, so a commit that lands after ``head`` is never dropped.
+        Returns the new version.
+        """
+        start = self.snapshot(version)
+        cur = self.current_version()
+        head = cur if head is None else head
+        if cur != head or self.history()[-1] != head:
+            raise CommitConflictError(f"rollback to v{version}: table moved past v{head}")
+        snap = Snapshot(
+            version=head + 1,
+            parent=head,
+            schema=start.schema,
+            key_col=start.key_col,
+            num_buckets=start.num_buckets,
+            files=list(start.files) + list(cherry_pick),
+            properties={**_inherited(start.properties), **(properties or {})},
+            applied=start.applied,
+            operation=operation,
+        )
+        self._write_snapshot(snap)  # create-if-absent: a racing commit wins
+        return snap.version
 
     def compact(self, spark: SparkSession, max_files_per_bucket: int = 4) -> int:
         """Rewrite buckets whose file count exceeds the threshold (one commit).

@@ -332,6 +332,29 @@ def test_projection_backup_filter_scopes_backup(spark, warehouse):
         assert r["tokens"] == [1] and r["n_tok"] == 1  # NOT backed up -> kept
 
 
+def test_projection_backup_filter_scopes_backup_without_foreign_commit(spark, warehouse):
+    """P2 with no foreign commit since migration start: time travel would
+    restore the columns the narrowed backup left out, so rollback takes the
+    changelog path and restores only the backed-up subset."""
+    cat, t = seed(spark, warehouse, n=10)
+    initial = {r["doc_id"]: r for r in rows_of(t.read(spark))}
+    m = mig(
+        spark, warehouse,
+        projection=["tokens", "n_tok", "source"],
+        update={"source": "P2", "tokens": F.array(F.lit(1)), "n_tok": F.lit(1)},
+        options=MigrationOptions(projection_backup_filter=["source"]),
+    )
+    m.update()
+    res = m.rollback()
+    got = {r["doc_id"]: r for r in rows_of(cat.load_table("seq").read(spark))}
+    for k, r in got.items():
+        assert r["source"] == initial[k]["source"]  # backed up -> restored
+        assert r["tokens"] == [1] and r["n_tok"] == 1  # NOT backed up -> kept
+    assert [(b["mode"], b.get("fallback")) for b in res["batches"]] == [
+        ("changelog", "narrowed-backup")
+    ]
+
+
 def test_custom_rollback_callback(spark, warehouse):
     """M6: config.rollback rewrites the restore source
     (rollback.test.ts:932-972, 1082-1105)."""

@@ -6,6 +6,11 @@ delete chains, updates racing deletes across the batch boundary, transform
 arguments at the edge) and asserts the engine's table state — and its
 rollback — match the pure-Python oracle simulator event-for-event.
 
+Between the replay and the rollback a drawn history may add a foreign
+``LakeTable.append``: brand-new keys (rollback time-travels and keeps them)
+or a re-creation of a key the migration deleted (rollback must take the
+changelog path and keep the foreign row).
+
 Runtime is bounded: few, small examples (a Spark round-trip per example);
 the value is the ORDERING coverage, not volume.
 """
@@ -16,7 +21,7 @@ import shutil
 import tempfile
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from mongo_bulk_data_migration_spark import Catalog
@@ -62,19 +67,44 @@ def scenarios(draw):
                 transform = "append_eos"
             if draw(st.booleans()):
                 source = draw(st.sampled_from(["web", "books", "code", "wiki"]))
-        events.append(
-            {
-                "seq": seq,
-                "part": stable_hash(doc_id) % 4,
-                "op": op,
-                "doc_id": doc_id,
-                "tokens": tokens,
-                "transform": transform,
-                "source": source,
-                "extra": None,
-            }
-        )
-    return n_docs, events
+        events.append(_event(seq, op, doc_id, tokens, transform, source))
+    foreign = draw(st.sampled_from(FOREIGN_MODES))
+    if foreign == "recreate":
+        # guarantee a key the migration deleted: a final delete of an
+        # initial doc
+        events.append(_event(n_events, "delete", "doc00000000"))
+    return n_docs, events, foreign
+
+
+# what a foreign writer appends between replay and rollback
+FOREIGN_MODES = ("none", "new", "recreate")
+
+
+def _event(seq, op, doc_id, tokens=None, transform=None, source=None):
+    return {
+        "seq": seq, "part": stable_hash(doc_id) % 4, "op": op, "doc_id": doc_id,
+        "tokens": tokens, "transform": transform, "source": source, "extra": None,
+    }
+
+
+def _foreign_row(sim, foreign):
+    """The row the foreign writer appends, or None: a brand-new key, or a
+    re-creation of a key the migration deleted (logged, now absent)."""
+    if foreign == "new":
+        return {"doc_id": "ext00000000", "tokens": [5, 6], "n_tok": 2, "source": "foreign"}
+    if foreign == "recreate":
+        k = min(k for k in sim.changelog if k not in sim.state)
+        return {"doc_id": k, "tokens": [7], "n_tok": 1, "source": "foreign"}
+    return None
+
+
+# one fixed history per foreign mode that appends, so every run covers both
+_EXAMPLE_EVENTS = [
+    _event(0, "update", "doc00000000", transform="append_eos", source="web"),
+    _event(1, "insert", "doc00000004", tokens=[1, 2]),
+    _event(2, "update", "doc00000001", transform="truncate:2"),
+    _event(3, "delete", "doc00000002"),
+]
 
 
 def _compare(got_rows, want_rows):
@@ -95,8 +125,10 @@ def _compare(got_rows, want_rows):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(data=scenarios())
+@example(data=(3, _EXAMPLE_EVENTS, "new"))
+@example(data=(3, _EXAMPLE_EVENTS + [_event(4, "delete", "doc00000000")], "recreate"))
 def test_replay_and_rollback_match_simulator(spark, dummy, data):
-    n_docs, events = data
+    n_docs, events, foreign = data
     per_batch = max(len(events) // 2, 1)  # 2 micro-batches
 
     wh = tempfile.mkdtemp(prefix="mbdm_prop_")
@@ -113,7 +145,16 @@ def test_replay_and_rollback_match_simulator(spark, dummy, data):
             sim.apply_batch([e for e in events if e["seq"] // per_batch == b])
         _compare(rows_of(t.read(spark)), sim.rows())
 
-        rep.rollback()
+        row = _foreign_row(sim, foreign)
+        if row is not None:
+            t.append(spark.createDataFrame([row], SEQUENCES_SCHEMA))
+            sim.state[row["doc_id"]] = row
+        res = rep.rollback()
+        # time travel iff no appended key is one the migration logged
+        fast = row is None or row["doc_id"] not in sim.changelog
+        assert [b["mode"] for b in res["batches"]] == [
+            "snapshot-time-travel" if fast else "changelog"
+        ]
         sim.rollback()
         _compare(rows_of(cat.load_table("seq").read(spark)), sim.rows())
     finally:
