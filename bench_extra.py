@@ -54,7 +54,6 @@ def _spark():
 
 def cdc(args) -> None:
     from mongo_bulk_data_migration_spark import Catalog
-    from mongo_bulk_data_migration_spark.plans.migration import MigrationOptions
     from mongo_bulk_data_migration_spark.sources.fixtures import (
         SEQUENCES_SCHEMA,
         changes_df,
@@ -85,8 +84,7 @@ def cdc(args) -> None:
             load_s = time.monotonic() - t0
             events = changes_df(spark, n_docs, n_events, n_parts=CPUS, parallelism=CPUS)
             rep = ChangeStreamReplayer(
-                spark, wh, "sequences", f"bx{r}", evolve_schema=False,
-                options=MigrationOptions(pipeline_commit=not args.no_pipeline),
+                spark, wh, "sequences", f"bx{r}", evolve_schema=False
             )
             t1 = time.monotonic()
             ms = rep.apply_changes(
@@ -142,7 +140,7 @@ def cdcplans(args) -> None:
         b0 = pre[min(pre)]
         plan = build_merge_plan(
             t, spark, None,
-            update_cols=rep._update_cols(t),
+            update_cols=rep.engine._projected(t),
             carry_cols=["seq", "transform", "part"],
             value_exprs=rep._value_exprs(t),
             prestaged=b0,
@@ -205,7 +203,6 @@ def main() -> None:
     c.add_argument("--events-per-doc", type=int, default=4)
     c.add_argument("--batches", type=int, default=4)
     c.add_argument("--buckets", type=int, default=32)
-    c.add_argument("--no-pipeline", action="store_true")
     c.add_argument("--shj", default=None,
                    help="override AQE maxShuffledHashJoinLocalMapThreshold")
     c.add_argument("--gate", action="store_true",

@@ -22,7 +22,6 @@ serialized forward operation.  Extensions for the CDC generalization:
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -46,7 +45,7 @@ _EPOCH = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
 # (driver-side, no Spark job) — measuring FILE bytes instead would count
 # the multi-KB backup payloads and turn the broadcast off exactly when it
 # matters most.
-LOG_BROADCAST_MAX_ROWS = int(os.environ.get("MBDM_LOG_BCAST_MAX_ROWS", str(1_500_000)))
+LOG_BROADCAST_MAX_ROWS = 1_500_000
 
 
 def changelog_schema(data_schema: T.StructType, key_col: str) -> T.StructType:

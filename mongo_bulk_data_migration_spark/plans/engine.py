@@ -17,21 +17,24 @@ Mirrors ``MongoBulkDataMigration`` (``/root/reference/src/MongoBulkDataMigration
 
 Execution model: one logical migration = one or more micro-batch commits; all
 row work is DataFrame expressions (Catalyst-planned, codegen'd) or Arrow
-pandas UDFs — never per-row Python.
+pandas UDFs — never per-row Python.  Every batch commit — ``update()``'s
+``max_bulk_size`` batches, the CDC replayer's seq-range batches and stream
+epochs — goes through :class:`BatchCommit` (changelog append ∥ merge file
+write, changelog commit strictly before the merge commit).
 """
 
 from __future__ import annotations
 
 import json
 import logging
-import os
 import time
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..operators.merge import (
-    BROADCAST_MAX_KEYS, OP_COL, build_merge_plan, commit_merge, run_merge, stage_merge)
+    BROADCAST_MAX_KEYS, OP_COL, MergePlan, build_merge_plan, commit_merge, run_merge,
+    stage_merge)
 from ..sources.catalog import Catalog
 from ..sources.laketable import MAX_COMMIT_RETRIES, CommitConflictError, LakeTable
 from .changelog import Changelog
@@ -66,9 +69,7 @@ class MongoBulkDataMigrationSpark:
     def _backup_cols(self, target: LakeTable) -> list[str]:
         """P1/P2: fetched-and-projected columns are what gets backed up
         (``/root/reference/README.md:18``; `rollback.test.ts:110-160`)."""
-        key = target.key_col
-        cols = self.config.projection or [f.name for f in target.schema.fields if f.name != key]
-        cols = [c for c in cols if c != key]
+        cols = self._projected(target)
         opts = self.config.options
         for subset in (opts.projection_backup_filter, opts.cdc_backup_cols):
             if subset is not None:  # P2 / its replayer analog: a subset
@@ -148,79 +149,34 @@ class MongoBulkDataMigrationSpark:
         # incremental checkpoints instead of one giant commit.
         batches = self._split_batches(src, target.key_col, cfg.options.max_bulk_size, total)
 
-        cl = self._changelog(target)
         base_batch = self._next_batch_id(target)
         res = BulkOperationResult()
         sink = MetricsSink(cfg.warehouse, cfg.id)
-        for i, bsrc in enumerate(batches):
-            batch_id = base_batch + i
-            tb = time.monotonic()
-            plan = build_merge_plan(
-                target,
-                self.spark,
-                bsrc,
-                update_cols=update_cols,
-                bypass_validation=cfg.options.bypass_validation,
-            )
-            try:
-                start_ver = target.current_version()
-                # recorded BEFORE the staged merge claims its version: no
-                # other target commit may land between stage and commit
-                self._record_migration_start(target, start_ver)
-                # pipelined commit (same as the CDC replayer): the backup
-                # append overlaps the merge's file writes; only the two
-                # manifest COMMITS are ordered (changelog first — B2 WAL)
-                op_name = f"migration-{cfg.id}-batch-{batch_id}"
-                pend_box: dict[str, Any] = {}
-
-                def _stage(plan=plan, op_name=op_name):
-                    try:
-                        pend_box["pending"] = stage_merge(target, plan, operation=op_name)
-                    except BaseException as e:
-                        pend_box["error"] = e
-
-                th = None
-                if cfg.options.pipeline_commit:
-                    from pyspark import InheritableThread
-
-                    th = InheritableThread(target=_stage, daemon=True)
-                    th.start()
-                try:
-                    n_backups = cl.append_batch(
+        with BatchCommit(self, target) as window:
+            for i, bsrc in enumerate(batches):
+                batch_id = base_batch + i
+                tb = time.monotonic()
+                m = window.commit(
+                    lambda: build_merge_plan(
+                        target,
                         self.spark,
-                        plan.preimage,
-                        batch_id,
-                        update_query,
-                        self._backup_cols(target),
-                        bucket_hint=plan.touched,
-                    )
-                finally:
-                    if th is not None:
-                        th.join()
-                if "error" in pend_box:
-                    raise pend_box["error"]
-                if th is None:
-                    pend_box["pending"] = stage_merge(target, plan, operation=op_name)
-                commit_merge(
-                    target,
-                    plan,
-                    pend_box["pending"],
-                    applied={cfg.id: {"batch_id": batch_id}},
-                    properties={"writer": cfg.id},
-                    operation=op_name,
+                        bsrc,
+                        update_cols=update_cols,
+                        bypass_validation=cfg.options.bypass_validation,
+                    ),
+                    batch_id,
+                    operation=f"migration-{cfg.id}-batch-{batch_id}",
+                    update_query=update_query,
+                    marker={"batch_id": batch_id},
                 )
-                m = plan.metrics()
-            finally:
-                plan.release()
-            m["n_backups"] = max(n_backups, 0)
-            m["migration_id"] = cfg.id
-            m["batch_id"] = batch_id
-            m["total_entries"] = total
-            m["wall_s"] = round(time.monotonic() - tb, 3)
-            res.fold(m)
-            sink.emit(m)
-            if cfg.options.throttle_ms:
-                time.sleep(cfg.options.throttle_ms / 1000.0)  # B3
+                m["migration_id"] = cfg.id
+                m["batch_id"] = batch_id
+                m["total_entries"] = total
+                m["wall_s"] = round(time.monotonic() - tb, 3)
+                res.fold(m)
+                sink.emit(m)
+                if cfg.options.throttle_ms:
+                    time.sleep(cfg.options.throttle_ms / 1000.0)  # B3
         out = res.as_dict()
         out["wall_s"] = round(time.monotonic() - t0, 3)
         return out
@@ -247,23 +203,19 @@ class MongoBulkDataMigrationSpark:
         """
         if not max_bulk_size or (0 <= total <= max_bulk_size):
             return [src]
-        import shutil
-        import uuid
-
         from pyspark.sql import Window
 
         n_part = max(int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")), 1)
-        scratch = os.path.join(self.config.warehouse, "_tmp", f"split-{uuid.uuid4().hex}")
-        (
-            src.select(key)
-            .repartitionByRange(n_part, F.col(key))
-            .sortWithinPartitions(key)
-            .withColumn("__pid", F.spark_partition_id())
-            .write.mode("overwrite")
-            .option("compression", "uncompressed")
-            .parquet(scratch)
-        )
-        try:
+        with self.catalog.scratch("split") as scratch:
+            (
+                src.select(key)
+                .repartitionByRange(n_part, F.col(key))
+                .sortWithinPartitions(key)
+                .withColumn("__pid", F.spark_partition_id())
+                .write.mode("overwrite")
+                .option("compression", "uncompressed")
+                .parquet(scratch)
+            )
             staged = self.spark.read.parquet(scratch)
             cnts = {
                 r["__pid"]: r["n"]
@@ -292,8 +244,6 @@ class MongoBulkDataMigrationSpark:
                 .orderBy(key)
                 .collect()
             ]
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
         if len(marks) <= 1:
             return [src]
         out = []
@@ -557,4 +507,165 @@ class MongoBulkDataMigrationSpark:
             "rollback_collection": self.config.rollback_table_name,
             "migration_id": self.config.id,
             "options": self.config.options.__dict__,
+        }
+
+
+# ----------------------------------------------------------------------
+# the batch-commit protocol
+
+
+def overlap(background: Callable[[], Any], foreground: Callable[[], Any]) -> tuple[Any, Any]:
+    """Run ``background`` on a driver thread while ``foreground`` runs on
+    this one (independent Spark jobs overlap) and return both results.
+    Neither failure is dropped: the foreground error wins and a concurrent
+    background error rides as its ``__cause__``."""
+    from pyspark import InheritableThread
+
+    box: dict[str, Any] = {}
+
+    def run() -> None:
+        try:
+            box["result"] = background()
+        except BaseException as e:  # surfaced after join
+            box["error"] = e
+
+    th = InheritableThread(target=run, daemon=True)
+    th.start()
+    try:
+        result = foreground()
+    except BaseException as e:
+        th.join()
+        if "error" in box:
+            raise e from box["error"]
+        raise
+    th.join()
+    if "error" in box:
+        raise box["error"]
+    return box["result"], result
+
+
+class SimulatedCrash(RuntimeError):
+    """Fault-injection marker (tests kill the run between protocol steps —
+    the analog of `update.test.ts:95-139` crash-resume)."""
+
+    def __init__(self, batch_id: int, where: str):
+        super().__init__(f"simulated crash after {where} of batch {batch_id}")
+        self.batch_id = batch_id
+        self.where = where
+
+
+class BatchCommit:
+    """One window of batch commits: the reference's per-batch loop (backup
+    bulk, then migration bulk, ``MBDM.ts:160-201``), shared by ``update()``,
+    the CDC replayer and stream epochs.
+
+    Each :meth:`commit` builds the caller's merge plan, records the
+    migration start, then runs the changelog append and the merge's file
+    writes concurrently: the WAL discipline (B2, ``MBDM.ts:170-173``)
+    constrains commit VISIBILITY, not file IO — staged merge files are
+    unreferenced by any manifest until ``commit_merge`` flips the pointer,
+    strictly after the changelog commit.  A crash anywhere in between leaves
+    orphan data files and an intact table; a re-run re-stages them.  MoR
+    auto-compaction runs on a driver thread overlapped with the next batch
+    and is joined when the window closes.
+
+    ``crash_after=(batch_id, where)`` injects a :class:`SimulatedCrash` at a
+    named crash point: ``changelog`` (changelog committed, merge not) here,
+    ``merge`` (merge committed, caller's progress not) via
+    :meth:`crash_point`."""
+
+    def __init__(self, engine: MongoBulkDataMigrationSpark, target: LakeTable,
+                 crash_after: tuple[int, str] | None = None):
+        self.engine = engine
+        self.target = target
+        self.crash_after = crash_after
+        # one Changelog per window: its batch-invariant expression trees
+        # (backup struct / record array) are memoized on the instance
+        self.changelog = engine._changelog(target)
+        self.compact_box: dict[str, Any] = {}
+
+    def __enter__(self) -> BatchCommit:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        th = self.compact_box.get("thread")
+        if th is not None:
+            th.join()  # no dangling fold past the window
+        err = self.compact_box.pop("error", None)
+        if err is not None:
+            if exc is None:
+                raise err
+            log.error("MoR auto-compaction failed during a failed window: %r", err)
+
+    def crash_point(self, batch_id: int, where: str) -> None:
+        if self.crash_after == (batch_id, where):
+            raise SimulatedCrash(batch_id, where)
+
+    def commit(
+        self,
+        build_plan: Callable[[], MergePlan],
+        batch_id: int,
+        operation: str,
+        update_query: str,
+        marker: dict[str, Any],
+    ) -> dict[str, Any]:
+        """Back up, then publish, one batch; ``marker`` is the target's
+        applied-marker payload.  Returns the batch's merge metrics, backup
+        count and phase timings."""
+        engine, target = self.engine, self.target
+        sc = engine.spark.sparkContext
+        t0 = time.monotonic()
+        sc.setJobDescription(f"{operation}: plan")
+        plan = build_plan()
+        t_plan = time.monotonic() - t0
+        try:
+            # recorded BEFORE the staged merge claims its version: no other
+            # target commit may land between stage and commit
+            engine._record_migration_start(target, target.current_version())
+            t1 = time.monotonic()
+
+            def _stage() -> tuple[Any, float]:
+                sc.setJobDescription(f"{operation}: merge-write")
+                return stage_merge(target, plan, operation=operation), time.monotonic() - t1
+
+            def _append() -> tuple[int, float]:
+                sc.setJobDescription(f"{operation}: changelog")
+                n = self.changelog.append_batch(
+                    engine.spark,
+                    plan.preimage,
+                    batch_id,
+                    update_query,
+                    engine._backup_cols(target),
+                    bucket_hint=plan.touched,
+                )
+                return n, time.monotonic() - t1
+
+            (pending, t_stage), (n_backups, t_append) = overlap(_stage, _append)
+            t_changelog = time.monotonic() - t1  # append ∥ merge file write
+            self.crash_point(batch_id, "changelog")
+            t2 = time.monotonic()
+            sc.setJobDescription(f"{operation}: merge-commit")
+            commit_merge(
+                target,
+                plan,
+                pending,
+                applied={engine.config.id: marker},
+                properties={"writer": engine.config.id},
+                operation=operation,
+                async_compact_box=self.compact_box,
+            )
+            t_merge = time.monotonic() - t2
+            metrics = plan.metrics()
+        finally:
+            plan.release()
+            sc.setJobDescription(None)
+        return {
+            **metrics,
+            "n_backups": max(n_backups, 0),
+            "plan_s": round(t_plan, 4),
+            "changelog_s": round(t_changelog, 4),
+            "append_s": round(t_append, 4),
+            "append_detail": self.changelog.last_timings,
+            "stage_s": round(t_stage, 4),
+            "merge_s": round(t_merge, 4),
         }

@@ -49,11 +49,6 @@ class MigrationOptions:
     bypass_validation: bool = False     # validator toggle analog (MBDM.ts:425-449)
     skip_unchanged: bool = False        # P4 NO_UPDATE analog (MBDM.ts:284-286)
     dedup_salt: int | None = None       # extra two-phase salt for hot keys
-    # overlap the changelog append with the merge's file writes (manifest
-    # commits stay strictly ordered: changelog first — B2 WAL semantics are
-    # about commit visibility, not file IO); False restores the fully
-    # serial per-batch protocol for A/B measurement
-    pipeline_commit: bool = True
     # True materializes the HWM-filtered event stream to parquet scratch
     # before the replay window (pays an expensive upstream lineage — complex
     # joins, decode UDFs — exactly once, at the cost of writing + re-reading

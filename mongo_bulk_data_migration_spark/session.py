@@ -37,7 +37,10 @@ def get_spark(
         # per-partition build side fits (guide §3.1): the replay's batch-
         # bounded full-outer joins then skip both sorts; 256 MB per partition
         # is conservative against executor memory at any scale because AQE
-        # first coalesces partitions toward the advisory size
+        # first coalesces partitions toward the advisory size.  It fires:
+        # every replay_bulk and update() batch's merge write and changelog
+        # append ends in a ShuffledHashJoin FullOuter, a SortMergeJoin with
+        # the conf at 0 (plans/r07/shj_final_plan.txt)
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -7,8 +7,11 @@ directory-of-tables with POSIX-atomic renames.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+import uuid
+from typing import Iterator
 
 from pyspark.sql import types as T
 
@@ -22,6 +25,15 @@ class Catalog:
 
     def path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
+
+    @contextlib.contextmanager
+    def scratch(self, kind: str) -> Iterator[str]:
+        """A unique scratch path under the warehouse's ``_tmp``, removed on exit."""
+        path = os.path.join(self.warehouse, "_tmp", f"{kind}-{uuid.uuid4().hex}")
+        try:
+            yield path
+        finally:
+            shutil.rmtree(path, ignore_errors=True)
 
     def exists(self, name: str) -> bool:
         return LakeTable.exists(self.path(name))

@@ -854,7 +854,7 @@ class LakeTable:
         return removed
 
 
-MAX_COMMIT_RETRIES = int(os.environ.get("MBDM_COMMIT_RETRIES", "5"))
+MAX_COMMIT_RETRIES = 5
 
 
 class PendingCommit:

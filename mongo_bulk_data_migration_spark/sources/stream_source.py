@@ -114,21 +114,11 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
     # ------------------------------------------------------------ offsets
 
     def initialOffset(self) -> dict:
-        self._trace(f"initialOffset pid -> {self.from_version}")
         self._pos = self.from_version
         return {"version": self.from_version}
 
-    @staticmethod
-    def _trace(msg):
-        import os as _os
-        p = _os.environ.get("MBDM_STREAM_DEBUG")
-        if p:
-            with open(p, "a") as f:
-                f.write(f"{_os.getpid()} {msg}\n")
-
     def latestOffset(self) -> dict:
         cur = self._tbl.current_version()
-        self._trace(f"latestOffset pos={self._pos} cur={cur}")
         if self._pos is None:
             # observed runner call order (traced on Spark 4.1.2): a FRESH
             # query asks for availability before initialOffset, so the
@@ -141,14 +131,10 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
         self._pos = max(end, self._pos)
         return {"version": self._pos}
 
-    def commit(self, end: dict) -> None:  # nothing to clean up: log is immutable
-        self._trace(f"commit {end}")
-
     # --------------------------------------------------------- partitions
 
     def partitions(self, start: dict, end: dict) -> list[ChangeFeedPartition]:
         lo, hi = int(start["version"]), int(end["version"])
-        self._trace(f"partitions {lo}->{hi}")
         self._pos = max(self._pos or 0, hi)
         self._ensure_state(lo)
         out: list[ChangeFeedPartition] = []

@@ -14,6 +14,11 @@ per batch (seq range, stable across crashes):
   5. HWM advance       per-partition max seq              [R1]
   6. metrics emit      lineage + throughput row           [A4, B6]
 
+Steps 3-4 are the batch-commit protocol ``update()`` runs too
+(:class:`..plans.engine.BatchCommit`: the merge's file writes overlap the
+append, the two manifest commits stay ordered); steps 1-2 run once per
+window in the prestage, steps 5-6 in ``_advance``.
+
 Exactly-once: steps 3 and 4 are idempotent (markers committed atomically with
 their data); step 5 lags them. A crash between any two steps replays the
 batch; markers turn the replay into no-ops, so effective state is applied
@@ -40,9 +45,10 @@ from pyspark.sql import types as T
 
 from ..functions.tokens import parse_transform, transform_expr
 from ..operators.dedup import last_wins
-from ..operators.merge import OP_COL, build_merge_plan, commit_merge, stage_merge
-from ..plans.changelog import Changelog
-from ..plans.engine import MongoBulkDataMigrationSpark
+# stage_merge/commit_merge are unused here but perfbench/trace.py patches them on this module
+from ..operators.merge import OP_COL, build_merge_plan, commit_merge, stage_merge  # noqa: F401
+from ..plans.engine import BatchCommit, MongoBulkDataMigrationSpark, overlap
+from ..plans.engine import SimulatedCrash  # noqa: F401  (re-exported for callers)
 from ..plans.obsutil import observed
 from ..plans.hwm import HwmStore
 from ..plans.metrics import MetricsSink
@@ -119,17 +125,11 @@ class ChangeStreamReplayer:
         (the crash-safety anchor; the reference's batch split is likewise
         deterministic, pinned as [30,30,30,10] in `update.test.ts:228-277`).
         """
-        import shutil
-        import uuid
-
         from pyspark.sql import Observation
 
         target = self.catalog.load_table(self.config.collection_name)
         pending_plan = self.hwm.filter_events(self.spark, events)
-        root = os.path.join(
-            self.config.warehouse, "_tmp", f"replay-{uuid.uuid4().hex}"
-        )
-        try:
+        with self.catalog.scratch("replay") as root:
             if self.config.options.stage_pending:
                 # Stage the HWM-filtered stream to parquet scratch ONCE: for
                 # an EXPENSIVE upstream lineage (multi-way joins, decode UDFs)
@@ -164,66 +164,66 @@ class ChangeStreamReplayer:
                 # property crash-resume already requires.  Batch bounds come
                 # from the prestage lineage aggregation (no bounds job).
                 pending = pending_plan
-            # prestage path: collapse + prepare EVERY batch's merge source in
-            # one partitioned write and fold all per-batch stats jobs
-            # (lineage collect, staging observation, touched-bucket
-            # discovery) into two whole-window aggregations — the per-batch
-            # serial floor drops by ~1/3.  Dead-letter mode (B5) rides the
-            # same path since round 4: the validity split happens inside the
-            # prestage (one partitioned dead-letter write for the whole
-            # window; per-batch dead counts fold into the lineage agg).
-            if self.evolve_schema:
-                # payload-drift evolution hoisted to the window start:
-                # all drift is visible in `pending`, and add/widen are
-                # metadata-only — same final schema as per-batch checks
-                self._maybe_evolve(target, pending)
-            pre_batches = self._prestage(
-                target, pending, events_per_batch, os.path.join(root, "staged")
+            return self._replay_window(
+                target, pending, root, events_per_batch,
+                max_batches=max_batches, crash_after=crash_after,
             )
-            if not pre_batches:
-                return []
-            # invariant plan inputs hoisted out of the batch loop (the
-            # schema is fixed for the window once evolution ran above):
-            # Column expression trees are immutable and reusable, so the
-            # py4j construction cost is paid once per window, not per batch
-            plan_exprs = (self._update_cols(target), self._value_exprs(target))
-            # one Changelog per window: its batch-invariant expression trees
-            # (backup struct / record array) are memoized on the instance,
-            # so only batch-id-dependent literals are rebuilt per batch
-            cl = Changelog(
-                self.catalog, self.config.rollback_table_name, target,
-                self.config.id,
-            )
-            # MoR auto-compaction runs on a driver thread overlapped with
-            # the NEXT batch (VERDICT r5 #5); joined before window exit
-            compact_box: dict[str, Any] = {}
-            # lineage agg == exact per-batch event presence, so the batch
-            # range derived from it matches the old bounds observation
-            first_b, last_b = min(pre_batches), max(pre_batches)
-            out: list[dict[str, Any]] = []
+
+    def _replay_window(
+        self,
+        target: LakeTable,
+        pending: DataFrame,
+        root: str,
+        events_per_batch: int,
+        forced_batch: int | None = None,
+        max_batches: int | None = None,
+        crash_after: tuple[int, str] | None = None,
+    ) -> list[dict[str, Any]]:
+        """Apply every batch of ``pending`` in one :class:`BatchCommit`
+        window, in batch order."""
+        # prestage path: collapse + prepare EVERY batch's merge source in
+        # one partitioned write and fold all per-batch stats jobs
+        # (lineage collect, staging observation, touched-bucket
+        # discovery) into two whole-window aggregations — the per-batch
+        # serial floor drops by ~1/3.  Dead-letter mode (B5) rides the
+        # same path since round 4: the validity split happens inside the
+        # prestage (one partitioned dead-letter write for the whole
+        # window; per-batch dead counts fold into the lineage agg).
+        if self.evolve_schema:
+            # payload-drift evolution hoisted to the window start:
+            # all drift is visible in `pending`, and add/widen are
+            # metadata-only — same final schema as per-batch checks
+            self._maybe_evolve(target, pending)
+        pre_batches = self._prestage(
+            target, pending, events_per_batch, os.path.join(root, "staged"),
+            forced_batch=forced_batch,
+        )
+        if not pre_batches:
+            return []
+        # invariant plan inputs hoisted out of the batch loop (the
+        # schema is fixed for the window once evolution ran above):
+        # Column expression trees are immutable and reusable, so the
+        # py4j construction cost is paid once per window, not per batch
+        plan_exprs = (self.engine._projected(target), self._value_exprs(target))
+        # lineage agg == exact per-batch event presence, so the batch
+        # range derived from it matches the old bounds observation
+        first_b, last_b = min(pre_batches), max(pre_batches)
+        out: list[dict[str, Any]] = []
+        with BatchCommit(self.engine, target, crash_after) as window:
             for i, b in enumerate(range(first_b, last_b + 1)):
                 if max_batches is not None and i >= max_batches:
                     break
-                lo, hi = b * events_per_batch, (b + 1) * events_per_batch - 1
-                batch = pending.where((F.col("seq") >= lo) & (F.col("seq") <= hi))
                 if b not in pre_batches:
                     continue  # empty seq range (gap below the HWM)
-                m = self._apply_batch(
-                    target, batch, b, crash_after, pre=pre_batches[b],
-                    plan_exprs=plan_exprs, compact_box=compact_box, cl=cl,
-                )
+                lo, hi = b * events_per_batch, (b + 1) * events_per_batch - 1
+                batch = pending if forced_batch is not None else pending.where(
+                    (F.col("seq") >= lo) & (F.col("seq") <= hi))
+                m = self._apply_batch(window, target, batch, b, pre_batches[b], plan_exprs)
                 if m is not None:
                     out.append(m)
                 if self.config.options.throttle_ms:
                     time.sleep(self.config.options.throttle_ms / 1000.0)
-            th = compact_box.get("thread")
-            if th is not None:
-                th.join()  # no dangling fold past the window
-            if "error" in compact_box:
-                raise compact_box["error"]
-            return out
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
+        return out
 
     # ------------------------------------------------------------------
 
@@ -305,37 +305,25 @@ class ChangeStreamReplayer:
             batch_expr.alias("__batch"), F.col("part")
         ).agg(*lineage_aggs)
 
-        from pyspark import InheritableThread
+        def _collect_lineage() -> list:
+            sc.setJobDescription("cdc prestage: per-batch lineage")
+            return lrows_q.collect()
 
-        box: dict[str, Any] = {}
-
-        def _collect_lineage() -> None:
-            try:
-                sc.setJobDescription("cdc prestage: per-batch lineage")
-                box["lrows"] = lrows_q.collect()
-            except BaseException as e:
-                box["error"] = e
-
-        th_lineage = InheritableThread(target=_collect_lineage, daemon=True)
-        th_lineage.start()
-        try:
+        def _stage_and_stats() -> list:
             prepped.write.partitionBy("__batch").mode("overwrite").option(
                 "compression", "uncompressed"
             ).parquet(out_dir)
-            batch_schema = T.StructType(
-                [f for f in prepped.schema.fields if f.name != "__batch"]
-            )
             sc.setJobDescription("cdc prestage: per-batch stats")
             staged_all = self.spark.read.schema(prepped.schema).parquet(out_dir)
-            srows = staged_all.groupBy("__batch").agg(
+            return staged_all.groupBy("__batch").agg(
                 F.count(F.lit(1)).alias("n_source_keys"),
                 F.collect_set(F.col(BUCKET_COL)).alias("touched"),
             ).collect()
-        finally:
-            th_lineage.join()
-        if "error" in box:
-            raise box["error"]
-        lrows = box["lrows"]
+
+        lrows, srows = overlap(_collect_lineage, _stage_and_stats)
+        batch_schema = T.StructType(
+            [f for f in prepped.schema.fields if f.name != "__batch"]
+        )
         if valid is not None and any(int(r["n_dead"]) for r in lrows):
             # one partitioned write for the whole window; dynamic partition
             # overwrite keeps dead-letter batches from earlier windows, and
@@ -388,45 +376,27 @@ class ChangeStreamReplayer:
         dead-letter semantics — with the stream's epoch id as the batch id,
         so Structured Streaming's replay-after-crash hits the engine's
         applied-marker no-op exactly like a seq-range re-run."""
-        import shutil
-        import uuid
-
         target = self.catalog.load_table(self.config.collection_name)
-        if self.evolve_schema:
-            self._maybe_evolve(target, batch_df)
-        root = os.path.join(
-            self.config.warehouse, "_tmp", f"epoch-{uuid.uuid4().hex}"
-        )
-        try:
-            stats = self._prestage(
-                target, batch_df, 1, os.path.join(root, "staged"),
-                forced_batch=int(epoch_id),
+        with self.catalog.scratch("epoch") as root:
+            out = self._replay_window(
+                target, batch_df, root, 1, forced_batch=int(epoch_id)
             )
-            pre = stats.get(int(epoch_id))
-            if pre is None:
-                return None  # empty epoch
-            return self._apply_batch(target, batch_df, int(epoch_id), pre=pre)
-        finally:
-            shutil.rmtree(root, ignore_errors=True)
+        return out[0] if out else None  # None: empty epoch
 
     def _apply_batch(
         self,
+        window: BatchCommit,
         target: LakeTable,
         batch: DataFrame,
         batch_id: int,
-        crash_after: tuple[int, str] | None = None,
-        pre: dict[str, Any] | None = None,
-        plan_exprs: tuple | None = None,
-        compact_box: dict[str, Any] | None = None,
-        cl: Changelog | None = None,
+        pre: dict[str, Any],
+        plan_exprs: tuple,
     ) -> dict[str, Any] | None:
         t0 = time.monotonic()
         cfg = self.config
 
         marker = target.applied_marker(cfg.id)
-        already_applied = marker is not None and marker.get("batch_id", -1) >= batch_id
-
-        if already_applied:
+        if marker is not None and marker.get("batch_id", -1) >= batch_id:
             # rare replay-of-applied path (crash after merge, before HWM):
             # lineage from the raw batch — one pruned 2-column scan
             part_rows = batch.groupBy("part").agg(
@@ -434,42 +404,18 @@ class ChangeStreamReplayer:
             ).collect()
             if not part_rows:
                 return None
-            n_events = sum(r["n"] for r in part_rows)
             part_hwm = {int(r["part"]): int(r["max_seq"]) for r in part_rows}
-            max_seq = max(part_hwm.values())
-            if crash_after and crash_after == (batch_id, "merge"):
-                raise SimulatedCrash(batch_id, "merge")
-            self.hwm.advance(part_hwm, batch_id)
-            wall = time.monotonic() - t0
-            m = {
-                "migration_id": cfg.id,
-                "batch_id": batch_id,
-                "n_events": int(n_events),
-                "n_parts": len(part_hwm),
-                "part_hwm": part_hwm,
-                "max_seq": max_seq,
-                "n_backups": 0,
-                "n_dead_lettered": 0,
-                "replayed": True,
-                "wall_s": round(wall, 4),
-                "events_per_sec": round(n_events / wall, 1) if wall > 0 else None,
-            }
-            self.metrics.emit(m)
-            return m
+            return self._advance(window, t0, batch_id, part_hwm,
+                                 sum(r["n"] for r in part_rows), replayed=True)
 
-        n_backups = 0
-        merge_metrics: dict[str, Any] = {}
-        t_plan = t_changelog = t_merge = t_append = 0.0
-        sc = self.spark.sparkContext
         # prestaged path (the only path since round 4): evolution hoisted to
         # the window start, source already collapsed/prepared, stats (incl.
         # per-batch dead-letter counts) precomputed — zero per-batch staging
         # or lineage jobs
         if not pre["part_hwm"]:
             return None
-        n_dead = int(pre.get("n_dead", 0))
         part_hwm = dict(pre["part_hwm"])
-        n_events = int(pre["n_events"])
+        n_dead = int(pre.get("n_dead", 0))
         if pre["path"] is None:
             # every event in this batch was dead-lettered (B5): nothing to
             # merge, but the HWM must still advance past them — otherwise
@@ -477,159 +423,57 @@ class ChangeStreamReplayer:
             # malformed events forever (livelock, ADVICE r2).  The
             # dead-letter write is idempotent (dynamic partition overwrite),
             # so a crash before this advance replays cleanly.
-            if crash_after and crash_after == (batch_id, "merge"):
-                raise SimulatedCrash(batch_id, "merge")
-            self.hwm.advance(part_hwm, batch_id)
-            wall = time.monotonic() - t0
-            m = {
-                "migration_id": cfg.id,
-                "batch_id": batch_id,
-                "n_events": int(n_events),
-                "n_parts": len(part_hwm),
-                "part_hwm": part_hwm,
-                "max_seq": max(part_hwm.values()),
-                "n_backups": 0,
-                "n_dead_lettered": int(n_dead),
-                "replayed": False,
-                "wall_s": round(wall, 4),
-                "events_per_sec": round(n_events / wall, 1) if wall > 0 else None,
-            }
-            self.metrics.emit(m)
-            return m
-        src = None
-        t1 = time.monotonic()
-        sc.setJobDescription(f"cdc b{batch_id}: plan+stage")
-        if plan_exprs is None:
-            plan_exprs = (self._update_cols(target), self._value_exprs(target))
-        plan = build_merge_plan(
-            target,
-            self.spark,
-            src,
-            update_cols=plan_exprs[0],
-            carry_cols=["seq", "transform", "part"],
-            value_exprs=plan_exprs[1],
-            bypass_validation=cfg.options.bypass_validation,
-            prestaged=pre,
-        )
-        t_plan = time.monotonic() - t1
-        max_seq = max(part_hwm.values())
-        t_lineage = time.monotonic() - t0 - t_plan
-        try:
-            if cl is None:  # epoch path / direct callers
-                cl = Changelog(
-                    self.catalog, cfg.rollback_table_name, target, cfg.id
-                )
-            start_ver = target.current_version()
-            # record the pre-migration version FIRST (idempotent, once per
-            # migration, driver-side metadata commit): the staged merge
-            # below claims the next version at stage time, so no other
-            # target commit may land between stage and commit_merge
-            self.engine._record_migration_start(target, start_ver)
-            t2 = time.monotonic()
-            # Pipelined commit (round 5): the changelog append and the
-            # merge's FILE WRITES run concurrently — the WAL discipline
-            # (B2, `MongoBulkDataMigration.ts:170-173`) constrains commit
-            # VISIBILITY, not file IO: staged merge files are unreferenced
-            # by any manifest until commit_merge flips the pointer, which
-            # happens strictly after the changelog commit below.  A crash
-            # anywhere in between leaves orphan data files and an intact
-            # table — replay re-stages them (same version => same dir).
-            # This hides ~min(t_changelog, t_merge_write) of the per-batch
-            # serial floor, the Amdahl `S` that caps N->4N scaling.
-            op_name = f"cdc-{cfg.id}-batch-{batch_id}"
-            pend_box: dict[str, Any] = {}
-
-            def _stage_files() -> None:
-                _ts = time.monotonic()
-                try:
-                    sc.setJobDescription(f"cdc b{batch_id}: merge-write")
-                    pend_box["pending"] = stage_merge(target, plan, operation=op_name)
-                except BaseException as e:  # surfaced after join
-                    pend_box["error"] = e
-                finally:
-                    pend_box["stage_s"] = round(time.monotonic() - _ts, 4)
-
-            th = None
-            if cfg.options.pipeline_commit:
-                from pyspark import InheritableThread
-
-                th = InheritableThread(target=_stage_files, daemon=True)
-                th.start()
-            try:
-                sc.setJobDescription(f"cdc b{batch_id}: changelog")
-                _ta = time.monotonic()
-                n_backups = cl.append_batch(
-                    self.spark,
-                    plan.preimage,
-                    batch_id,
-                    update_query=f'{{"cdc_batch": {batch_id}}}',
-                    # full pre-image by default; a deployment may scope the
-                    # backup to a column subset (P1/P2 through the replayer)
-                    backup_cols=cfg.options.cdc_backup_cols,
-                    bucket_hint=plan.touched,
-                )
-                t_append = time.monotonic() - _ta
-            except BaseException as append_exc:
-                if th is not None:
-                    th.join()
-                # surface BOTH failures (ADVICE r5): the append error wins,
-                # the concurrent stage error rides as __cause__
-                if pend_box.get("error") is not None:
-                    raise append_exc from pend_box["error"]
-                raise
-            finally:
-                if th is not None:
-                    th.join()
-            # overlapped window: changelog append ∥ merge file write
-            t_changelog = time.monotonic() - t2
-            if "error" in pend_box:
-                raise pend_box["error"]
-            if crash_after and crash_after == (batch_id, "changelog"):
-                raise SimulatedCrash(batch_id, "changelog")
-            t3 = time.monotonic()
-            sc.setJobDescription(f"cdc b{batch_id}: merge-commit")
-            if th is None:
-                pend_box["pending"] = stage_merge(target, plan, operation=op_name)
-            commit_merge(
+            return self._advance(window, t0, batch_id, part_hwm, pre["n_events"],
+                                 n_dead_lettered=n_dead)
+        t_lineage = time.monotonic() - t0
+        phases = window.commit(
+            lambda: build_merge_plan(
                 target,
-                plan,
-                pend_box["pending"],
-                applied={cfg.id: {"batch_id": batch_id, "max_seq": max_seq}},
-                properties={"writer": cfg.id},
-                operation=op_name,
-                async_compact_box=compact_box,
-            )
-            t_merge = time.monotonic() - t3
-            merge_metrics = plan.metrics()
-        finally:
-            plan.release()
+                self.spark,
+                None,
+                update_cols=plan_exprs[0],
+                carry_cols=["seq", "transform", "part"],
+                value_exprs=plan_exprs[1],
+                bypass_validation=cfg.options.bypass_validation,
+                prestaged=pre,
+            ),
+            batch_id,
+            operation=f"cdc-{cfg.id}-batch-{batch_id}",
+            update_query=f'{{"cdc_batch": {batch_id}}}',
+            marker={"batch_id": batch_id, "max_seq": max(part_hwm.values())},
+        )
+        return self._advance(window, t0, batch_id, part_hwm, pre["n_events"],
+                             n_dead_lettered=n_dead, lineage_s=round(t_lineage, 4),
+                             **phases)
 
-        sc.setJobDescription(None)
-        if crash_after and crash_after == (batch_id, "merge"):
-            raise SimulatedCrash(batch_id, "merge")
+    def _advance(
+        self,
+        window: BatchCommit,
+        t0: float,
+        batch_id: int,
+        part_hwm: dict[int, int],
+        n_events: int,
+        **row: Any,
+    ) -> dict[str, Any]:
+        """The batch's tail: the ``merge`` crash point, the HWM advance (it
+        lags the merge commit, so a crash before it replays the batch into
+        the applied-marker no-op above), then the metrics row."""
+        window.crash_point(batch_id, "merge")
         self.hwm.advance(part_hwm, batch_id)
-
         wall = time.monotonic() - t0
         m = {
-            "migration_id": cfg.id,
+            "migration_id": self.config.id,
             "batch_id": batch_id,
             "n_events": int(n_events),
             "n_parts": len(part_hwm),
             "part_hwm": part_hwm,
-            "max_seq": max_seq,
-            "n_backups": int(max(n_backups, 0)),
-            "n_dead_lettered": int(n_dead),
-            "replayed": bool(already_applied),
+            "max_seq": max(part_hwm.values()),
+            "n_backups": 0,
+            "n_dead_lettered": 0,
+            "replayed": False,
             "wall_s": round(wall, 4),
-            "lineage_s": round(t_lineage, 4),
-            "plan_s": round(t_plan, 4),
-            "changelog_s": round(t_changelog, 4),
-            "append_s": round(t_append, 4),
-            "append_detail": getattr(cl, "last_timings", None),
-            "stage_s": pend_box.get("stage_s"),
-            "merge_s": round(t_merge, 4),
             "events_per_sec": round(n_events / wall, 1) if wall > 0 else None,
-            **merge_metrics,
+            **row,
         }
         self.metrics.emit(m)
         return m
@@ -672,10 +516,6 @@ class ChangeStreamReplayer:
         )
         return src
 
-    def _update_cols(self, target: LakeTable) -> list[str]:
-        key = target.key_col
-        return [f.name for f in target.schema.fields if f.name != key]
-
     def _value_exprs(self, target: LakeTable):
         """Column expressions for 'update'-op rows, evaluated inside the
         merge join: target columns by name, source (event) columns as
@@ -702,12 +542,3 @@ class ChangeStreamReplayer:
     def clean(self) -> dict[str, Any]:
         return self.engine.clean()
 
-
-class SimulatedCrash(RuntimeError):
-    """Fault-injection marker (tests kill the run between protocol steps —
-    the analog of `update.test.ts:95-139` crash-resume)."""
-
-    def __init__(self, batch_id: int, where: str):
-        super().__init__(f"simulated crash after {where} of batch {batch_id}")
-        self.batch_id = batch_id
-        self.where = where

@@ -3,6 +3,7 @@
 Each test mirrors a reference behavior test (cited inline).
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from mongo_bulk_data_migration_spark import (
@@ -250,6 +251,46 @@ def test_fetch_all_reprocesses_crashed_batch_keys(spark, warehouse):
     # their backups stayed first-write-wins (4 old + 6 new)
     assert res["nBackups"] == 6
 
+    m.rollback()
+    assert rows_of(cat.load_table("seq").read(spark)) == initial
+
+
+def test_fetch_all_resumes_after_merge_commit_crash(spark, warehouse, tmp_path, monkeypatch):
+    """The real-crash twin of the test above: the merge commit of batch 1 of
+    3 fails after that batch's changelog append committed.  A FETCH_ALL
+    re-run ends in the uninterrupted run's state — no key skipped, none
+    transformed twice (``append_eos`` is not idempotent) — and rollback
+    restores the initial rows."""
+    from mongo_bulk_data_migration_spark.plans import engine as engine_mod
+
+    def migration(wh):
+        return mig(spark, wh, update=("transform", "append_eos"), query=FETCH_ALL,
+                   options=MigrationOptions(max_bulk_size=10))
+
+    ref_wh = str(tmp_path / "ref")
+    _, t_ref = seed(spark, ref_wh, n=30)
+    assert len(migration(ref_wh).update()["batches"]) == 3
+    want = rows_of(t_ref.read(spark))
+
+    cat, t = seed(spark, warehouse, n=30)
+    initial = rows_of(t.read(spark))
+    real_commit = engine_mod.commit_merge
+    crashed = []
+
+    def commit_fails_once(table, plan, pending, applied=None, **kw):
+        if not crashed and applied["m1"]["batch_id"] == 1:
+            crashed.append(1)
+            raise RuntimeError("crash before the merge commit of batch 1")
+        return real_commit(table, plan, pending, applied=applied, **kw)
+
+    monkeypatch.setattr(engine_mod, "commit_merge", commit_fails_once)
+    m = migration(warehouse)
+    with pytest.raises(RuntimeError, match="crash before the merge commit"):
+        m.update()
+    assert t.applied_marker("m1")["batch_id"] == 0
+    res = m.update()  # resume: batch 1's keys are re-fetched, batch 0's are not
+    assert res["nModified"] == 20
+    assert rows_of(t.read(spark)) == want
     m.rollback()
     assert rows_of(cat.load_table("seq").read(spark)) == initial
 

@@ -332,6 +332,40 @@ def test_replay_per_batch_job_count_bounded(spark, tmp_path, dead_letter_mode):
     assert n_jobs <= 58, f"per-batch job count regressed: {n_jobs} jobs for 4 batches"
 
 
+def test_update_per_batch_job_count_bounded(spark, tmp_path):
+    """update() runs the replayer's batch-commit protocol, so its per-batch
+    Spark job count is bounded the same way.  Budget: measured 36 jobs at
+    local[4] for the pre-count, the key split and the 4 batches below (the
+    hand-rolled loop before the shared protocol measured the same), plus
+    two jobs of headroom for AQE stage variance."""
+    from mongo_bulk_data_migration_spark import (
+        Catalog, DataMigrationConfig, MongoBulkDataMigrationSpark)
+    from mongo_bulk_data_migration_spark.plans.migration import MigrationOptions
+    from mongo_bulk_data_migration_spark.sources.fixtures import (
+        SEQUENCES_SCHEMA,
+        sequences_df,
+    )
+
+    wh = str(tmp_path / "wh")
+    cat = Catalog(wh)
+    t = cat.create_table("sequences", SEQUENCES_SCHEMA, num_buckets=8)
+    t.append(sequences_df(spark, 500, parallelism=4))
+    m = MongoBulkDataMigrationSpark(spark, DataMigrationConfig(
+        warehouse=wh, collection_name="sequences", id="updjobs",
+        update=("transform", "append_eos"),
+        options=MigrationOptions(max_bulk_size=125),
+    ))
+    sc = spark.sparkContext
+    sc.setJobGroup("update-audit", "update() job count contract")
+    try:
+        res = m.update()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(res["batches"]) == 4
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("update-audit"))
+    assert n_jobs <= 64, f"update() job count regressed: {n_jobs} jobs for 4 batches"
+
+
 def test_rollback_job_count_bounded(spark, tmp_path):
     """rollback() plans one restore merge over the changelog: the touched
     buckets come from the changelog manifest (no staging job) and the join

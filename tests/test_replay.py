@@ -133,6 +133,46 @@ def test_crash_resume_exactly_once(spark, warehouse, crash_point):
     compare(spark, t, sim)
 
 
+@pytest.mark.parametrize("entry", ["update", "replay"])
+def test_append_failure_chains_stage_error(spark, warehouse, monkeypatch, entry):
+    """Both halves of a batch fail: the changelog append's error propagates
+    with the concurrent merge stage's error as ``__cause__`` (neither is
+    dropped), and no merge commit lands."""
+    from mongo_bulk_data_migration_spark import DataMigrationConfig, MongoBulkDataMigrationSpark
+    from mongo_bulk_data_migration_spark.plans import engine as engine_mod
+    from mongo_bulk_data_migration_spark.plans.changelog import Changelog
+
+    cat, t, events, sim = setup_run(spark, warehouse)
+    initial = rows_of(t.read(spark))
+
+    def stage_fails(*a, **k):
+        raise RuntimeError("stage failed")
+
+    def append_fails(*a, **k):
+        raise OSError("append failed")
+
+    monkeypatch.setattr(engine_mod, "stage_merge", stage_fails)
+    monkeypatch.setattr(Changelog, "append_batch", append_fails)
+    if entry == "update":
+        run = MongoBulkDataMigrationSpark(spark, DataMigrationConfig(
+            warehouse=warehouse, collection_name="seq", id="chain", update={"source": "X"},
+        )).update
+    else:
+        rep = ChangeStreamReplayer(spark, warehouse, "seq", "chain")
+
+        def run():
+            rep.apply_changes(changes_spark(spark, events), events_per_batch=PER_BATCH)
+
+    with pytest.raises(OSError, match="append failed") as ei:
+        run()
+    assert isinstance(ei.value.__cause__, RuntimeError)
+    assert "stage failed" in str(ei.value.__cause__)
+    t = cat.load_table("seq")
+    assert t.applied_marker("chain") is None
+    assert not any("batch" in t.snapshot(v).operation for v in t.history())
+    assert rows_of(t.read(spark)) == initial
+
+
 def test_last_wins_multiple_events_per_key(spark, warehouse):
     """Invariant 6: a key with several events in one batch ends at the
     highest-seq event's effect (computed against pre-batch state)."""
@@ -407,11 +447,13 @@ def test_changelog_compaction_preserves_rollback(spark, warehouse):
     assert rows_of(cat.load_table("seq").read(spark)) == initial
 
 
-def test_mor_auto_compaction_bounds_layers(spark, warehouse):
-    """VERDICT r3 #8: a long MoR replay must not grow delta layers without
-    bound — run_merge auto-compacts when layers exceed the table's
-    `auto_compact_layers` cadence property.  Final state still equals the
-    oracle simulator (compaction is logically invisible)."""
+@pytest.mark.parametrize("entry", ["replay", "update"])
+def test_mor_auto_compaction_bounds_layers(spark, warehouse, entry):
+    """VERDICT r3 #8: a long MoR run must not grow delta layers without
+    bound — the batch commit auto-compacts when layers exceed the table's
+    `auto_compact_layers` cadence property, for the replayer and for a
+    multi-batch update() alike.  Final state still equals the expected
+    state (compaction is logically invisible)."""
     cat = Catalog(warehouse)
     t = cat.create_table(
         "seq", SEQUENCES_SCHEMA, num_buckets=8,
@@ -419,12 +461,22 @@ def test_mor_auto_compaction_bounds_layers(spark, warehouse):
     )
     rows = make_sequences(N_DOCS)
     t.append(spark.createDataFrame(rows, SEQUENCES_SCHEMA))
-    events = make_changes(N_DOCS, 800, n_parts=8, n_batches=8, seed=7)
-    sim = OracleSimulator(rows)
 
-    rep = ChangeStreamReplayer(spark, warehouse, "seq", "morac")
-    rep.apply_changes(changes_spark(spark, events), events_per_batch=100)  # 8 batches
-    sim_apply_all(sim, events, per_batch=100)
+    if entry == "replay":
+        events = make_changes(N_DOCS, 800, n_parts=8, n_batches=8, seed=7)
+        sim = OracleSimulator(rows)
+        rep = ChangeStreamReplayer(spark, warehouse, "seq", "morac")
+        rep.apply_changes(changes_spark(spark, events), events_per_batch=100)  # 8 batches
+        sim_apply_all(sim, events, per_batch=100)
+    else:
+        from mongo_bulk_data_migration_spark import DataMigrationConfig, MongoBulkDataMigrationSpark
+
+        res = MongoBulkDataMigrationSpark(spark, DataMigrationConfig(
+            warehouse=warehouse, collection_name="seq", id="morac", update={"source": "U"},
+            options=MigrationOptions(max_bulk_size=20),
+        )).update()
+        assert len(res["batches"]) == 6
+        sim = OracleSimulator([dict(r, source="U") for r in rows])
 
     # the cadence held: never more than k+1 layers existed at any commit
     # (the +1 is the batch that trips the threshold before its compact)
@@ -433,6 +485,7 @@ def test_mor_auto_compaction_bounds_layers(spark, warehouse):
         snap = t.snapshot(v)
         layers = len({f["dseq"] for f in snap.files if f.get("kind") == "delta"})
         assert layers <= 3, f"version {v}: {layers} delta layers"
+    assert t.delta_layers() <= 3
     compare(spark, t, sim)
 
 
@@ -488,42 +541,6 @@ def test_multibatch_rollback_is_bucket_pruned(spark, warehouse):
     }
     assert rewritten_buckets <= set(touched), (rewritten_buckets, touched)
     assert rows_of(t2.read(spark)) == initial
-
-
-def test_pipelined_vs_serial_commit_parity(spark, warehouse, tmp_path):
-    """The round-5 pipelined commit (changelog append ∥ merge file write,
-    manifest commits still ordered changelog-first) must produce byte-equal
-    end state AND identical changelog content vs the fully serial protocol."""
-    import os
-
-    # serial run in its own warehouse
-    wh2 = os.path.join(str(tmp_path), "wh_serial")
-    cat_p, t_p, events, sim = setup_run(spark, warehouse)
-    cat_s = Catalog(wh2)
-    t_s = cat_s.create_table("seq", SEQUENCES_SCHEMA, num_buckets=8)
-    t_s.append(spark.createDataFrame(make_sequences(N_DOCS), SEQUENCES_SCHEMA))
-
-    rep_p = ChangeStreamReplayer(
-        spark, warehouse, "seq", "ab",
-        options=MigrationOptions(pipeline_commit=True),
-    )
-    rep_s = ChangeStreamReplayer(
-        spark, wh2, "seq", "ab",
-        options=MigrationOptions(pipeline_commit=False),
-    )
-    ev = changes_spark(spark, events)
-    rep_p.apply_changes(ev, events_per_batch=PER_BATCH)
-    rep_s.apply_changes(ev, events_per_batch=PER_BATCH)
-
-    assert rows_of(t_p.read(spark)) == rows_of(t_s.read(spark))
-    # changelog parity (pre-images drive rollback — must match too)
-    clp = cat_p.load_table("_rollback_seq_ab").read(spark)
-    cls = cat_s.load_table("_rollback_seq_ab").read(spark)
-    assert rows_of(clp.drop("date")) == rows_of(cls.drop("date"))
-    # and the pipelined run still rolls back exactly
-    initial = {r["doc_id"] for r in make_sequences(N_DOCS)}
-    rep_p.rollback()
-    assert {r["doc_id"] for r in rows_of(t_p.read(spark))} == initial
 
 
 def test_direct_vs_staged_pending_parity(spark, warehouse, tmp_path):
