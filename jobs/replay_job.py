@@ -54,26 +54,19 @@ def main() -> None:
     from mongo_bulk_data_migration_spark.plans.migration import MigrationOptions
     from mongo_bulk_data_migration_spark.streaming.replay import ChangeStreamReplayer
 
-    # Apply the engine's session confs (mongo_bulk_data_migration_spark/
-    # session.py) WITHOUT overriding spark-submit's master/deploy settings.
-    # A bare builder silently ran the deploy shape with stock defaults —
-    # including snappy parquet, whose native codec path serializes under
-    # many concurrent writers of nested (token-array) columns in this
-    # environment (see session.py) — so the cluster legs measured codec
-    # contention, not the engine.  (None of these keys are passed via
-    # --conf by any caller; shuffle partitions / locality / local.dir stay
-    # submit-controlled.)
+    # Apply the engine's SQL confs (mongo_bulk_data_migration_spark/
+    # session.py: engine_conf) WITHOUT overriding spark-submit's master/
+    # deploy settings.  A bare builder silently ran the deploy shape with
+    # stock defaults — including snappy parquet, whose native codec path
+    # serializes under many concurrent writers of nested (token-array)
+    # columns in this environment (see session.py) — so the cluster legs
+    # measured codec contention, not the engine.  Master, deploy mode,
+    # driver memory, shuffle partitions, locality and local dirs stay
+    # submit-controlled.
+    from mongo_bulk_data_migration_spark.session import engine_conf
+
     b = SparkSession.builder.appName(f"mbdm-replay-{args.migration_id}")
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.parquet.compression.codec": os.environ.get(
-            "MBDM_CODEC", "uncompressed"),
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    }.items():
+    for k, v in engine_conf().items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     rep = ChangeStreamReplayer(

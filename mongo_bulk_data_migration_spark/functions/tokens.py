@@ -5,8 +5,13 @@ with bounded async concurrency (``/root/reference/src/MongoBulkDataMigration.ts:
 pLimit default 10 at ``:63,156``).  Re-expressed columnar, it has two tiers:
 
 1. **Named transforms** (the fixture DSL of FIXTURES.md T2) compiled to
-   built-in JVM-side expressions — whole-stage-codegen'd, zero Python in the
-   hot path.  This is the default for the 10^10-event replay.
+   built-in JVM-side expressions — zero Python in the hot path.  This is the
+   default for the 10^10-event replay.  Not all of them are whole-stage
+   codegen'd: ``remap_mod``'s per-token lambda is an ``ArrayTransform``, a
+   ``CodegenFallback``, so the ``Project`` holding :func:`transform_expr`
+   leaves whole-stage codegen and runs as a generated unsafe projection
+   that evaluates the lambda interpreted.  Hence the lambda reads only a
+   bound column (the parsed arg), never the DSL string.
 2. **Arbitrary user callbacks** as Arrow-vectorized pandas UDFs
    (:func:`pandas_transform_udf`) — never row-at-a-time Python.
 
@@ -41,15 +46,23 @@ def transform_expr(
     """New token array for a single event, as one JVM-side expression tree.
 
     ``cur_tokens``: the pre-event array (from the target row);
-    ``transform_name``/``transform_arg``: parsed DSL (arg may be NULL);
+    ``transform_name``/``transform_arg``: the parsed DSL
+    (:func:`parse_transform`; a NULL name is a no-op);
     ``event_tokens``: the event's payload array (for set_tokens / insert).
+    Pass bound columns for name and arg: ``remap_mod``'s lambda evaluates
+    ``transform_arg`` once per token.
     """
     k = transform_arg
     return (
         F.when(transform_name == "append_eos", F.concat(cur_tokens, F.array(F.lit(EOS_TOKEN).cast("int"))))
         .when(
             transform_name == "drop_first_k",
-            F.slice(cur_tokens, k + F.lit(1), F.greatest(F.size(cur_tokens) - k, F.lit(0))),
+            # least(): k + 1 must not overflow int for k = 2^31 - 1 (ANSI)
+            F.slice(
+                cur_tokens,
+                F.least(k, F.size(cur_tokens)) + F.lit(1),
+                F.greatest(F.size(cur_tokens) - k, F.lit(0)),
+            ),
         )
         .when(transform_name == "remap_mod", F.transform(cur_tokens, lambda t: F.pmod(t, k).cast("int")))
         .when(transform_name == "set_tokens", event_tokens)
@@ -59,10 +72,23 @@ def transform_expr(
 
 
 def parse_transform(col: Column) -> tuple[Column, Column]:
-    """Split ``'drop_first_k:7'`` -> (name, int arg); arg NULL when absent."""
-    name = F.split(col, ":").getItem(0)
-    arg = F.when(F.size(F.split(col, ":")) > 1, F.split(col, ":").getItem(1).cast("int"))
-    return name, arg
+    """Parse ``'drop_first_k:7'`` -> (name, int arg), one codegen'd string
+    pass per event.  The name is NULL unless the whole string is in the DSL
+    grammar with an argument the transform accepts: a non-negative int32
+    for ``drop_first_k``/``truncate``, a positive one for ``remap_mod``, none
+    for ``append_eos``/``set_tokens``.  A NULL name makes
+    :func:`transform_expr` a no-op, so no argument can fail the batch
+    (division by zero, int overflow) under ANSI mode."""
+    sep = F.instr(col, ":")
+    head = F.substring_index(col, ":", 1)
+    rest = col.substr(sep + F.lit(1), F.length(col))
+    arg = F.when((sep > 0) & rest.rlike("^[0-9]+$"), rest.try_cast("int"))
+    ok = (
+        (head.isin("append_eos", "set_tokens") & (sep == 0))
+        | (head.isin("drop_first_k", "truncate") & arg.isNotNull())
+        | ((head == "remap_mod") & (arg >= 1))
+    )
+    return F.when(ok, head), arg
 
 
 def apply_token_transform(

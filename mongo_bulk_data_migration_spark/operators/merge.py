@@ -76,6 +76,9 @@ class MergePlan:
     observations: dict[str, Observation] = field(default_factory=dict)
     scratch_dir: str | None = None     # staging dir, removed on release()
     static_metrics: dict[str, int] = field(default_factory=dict)  # prestage stats
+    # the batch id when the source carries it as data (``__batch``, the
+    # replay prestage's partition value) instead of the plan as a literal
+    batch: int | None = None
 
     def metrics(self) -> dict[str, int]:
         from ..plans.obsutil import observed
@@ -171,6 +174,7 @@ def build_merge_plan(
     prestaged: dict | None = None,
     touched: list[int] | None = None,
     n_keys: int | None = None,
+    derived_exprs: dict[str, Column] | None = None,
 ) -> MergePlan:
     """Build the merged rows + pre-images for one batch (single target scan).
 
@@ -182,6 +186,14 @@ def build_merge_plan(
     the source; a key outside them fails the write loudly.  ``n_keys`` is an
     upper bound on the source keys that comes with ``touched`` (staging
     counts them); without it the key set is not broadcast.
+
+    ``derived_exprs`` give 'update'-op values computed from the row's
+    merged values (``__new_<col>``), in a projection above the join: an
+    expression read by both a merged column and a derived one (the new
+    token array and its ``n_tok``) is evaluated once per row, not once per
+    consumer.  A prestaged source whose schema holds ``__c_batch`` (a
+    partition value of its staging directory) is read with that column, so
+    consumers bind the batch id as data, not as a per-batch literal.
     """
     key = table.key_col
     data_cols = [f.name for f in table.schema.fields if f.name != key]
@@ -193,7 +205,9 @@ def build_merge_plan(
         # the caller staged every batch's prepared source in ONE upfront
         # write (replay prestage path) — this batch is a directory-pruned
         # slice; touched buckets and counts were computed there
-        s = spark.read.schema(prestaged["schema"]).parquet(prestaged["path"])
+        s = spark.read.schema(prestaged["schema"]).option(
+            "basePath", os.path.dirname(prestaged["path"])
+        ).parquet(prestaged["path"])
         carry_cols = [
             c for c in (carry_cols or [])
             if f"__c_{c}" in prestaged["schema"].fieldNames()
@@ -258,6 +272,19 @@ def build_merge_plan(
         *[F.when(kept, merged_value(c)).alias(f"__new_{c}") for c in data_cols],
         *[F.col(f"__c_{c}").alias(f"__{c}") for c in carry_cols],
     )
+    derived = {
+        c: e for c, e in (derived_exprs or {}).items()
+        if c in data_cols and c in update_set
+    }
+    if derived:
+        # a second projection: CollapseProject keeps it apart because the
+        # merged columns it reads are consumed twice and are not cheap
+        combined = combined.withColumns({
+            f"__new_{c}": F.when(
+                F.col("__matched") & (op == "update"), e
+            ).otherwise(F.col(f"__new_{c}"))
+            for c, e in derived.items()
+        })
 
     m = F.col("__matched")
 
@@ -298,8 +325,10 @@ def build_merge_plan(
     # changefeed diff (cdc_ivm / stream_changefeed contract).
     tomb = m & (op == "delete")
     live = (m & op.isin("put", "update")) | (~m & op.isin("put", "insert"))
+    batch = prestaged.get("batch") if prestaged and "batch" in carry_cols else None
     delta = changes.where(live | tomb).select(
-        key, *new_cols, BUCKET_COL, tomb.alias(DELETED_COL)
+        key, *new_cols, BUCKET_COL, tomb.alias(DELETED_COL),
+        *(["__batch"] if batch is not None else []),
     )
     return MergePlan(
         result=result,
@@ -309,6 +338,7 @@ def build_merge_plan(
         observations=observations,
         scratch_dir=scratch,
         static_metrics=static_metrics,
+        batch=batch,
     )
 
 
@@ -359,7 +389,8 @@ def stage_merge(
     # both frames are already bucket-organized (see build_merge_plan)
     if mode == "mor":
         pending = table.stage_append_deltas(
-            plan.delta, plan.touched, operation=operation, repartition=False
+            plan.delta, plan.touched, operation=operation, repartition=False,
+            batch=plan.batch,
         )
     else:
         pending = table.stage_overwrite_buckets(

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..sources.catalog import Catalog
@@ -35,7 +35,10 @@ KIND_TOMBSTONE = "tombstone"
 KIND_REINSERT = "reinsert"
 
 # deterministic logical clock: epoch + batch_id seconds (no wall-clock in data)
-_EPOCH = dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc)
+_EPOCH_S = int(dt.datetime(2020, 1, 1, tzinfo=dt.timezone.utc).timestamp())
+
+# per-key log batch ids attached to a batch's pre-images (see _flag_join)
+_LOG_FLAGS = ("__backup_b", "__tomb_b", "__reins_b")
 
 # broadcast the per-key log flags while the pruned changelog holds at most
 # this many rows: the build side is the (key, kind, batch_id) aggregate, so
@@ -122,8 +125,10 @@ class Changelog:
         """Append pre-images (first-write-wins) + tombstones for one batch.
 
         ``preimage`` comes from :func:`..operators.merge.build_merge_plan`:
-        ``(key, __op, __matched, __pre_<col>...)``.  ``backup_cols`` is the
-        P1/P2 projection — only those columns are stored in the pre-image
+        ``(key, __op, __matched, __pre_<col>...)``, plus ``__batch`` (equal
+        to ``batch_id``) when the batch carries its id as data.
+        ``backup_cols`` is the P1/P2 projection — only those columns are
+        stored in the pre-image
         ("whatever is fetched and projected is what is saved as backup",
         ``/root/reference/README.md:18``).
 
@@ -151,13 +156,10 @@ class Changelog:
         bset = set(backup_cols) if backup_cols is not None else {f.name for f in backup_fields}
         have = set(preimage.columns)
 
-        date = F.lit(_EPOCH + dt.timedelta(seconds=batch_id)).cast("timestamp")
-        # Column trees are immutable: everything below that does NOT embed a
-        # batch-id literal (the backup struct and the record array) is a pure
-        # function of (preimage columns, backup projection, backup schema) —
-        # build it once per migration window instead of re-paying the py4j
-        # expression construction on every batch (VERDICT r5 serial-floor
-        # theme; the batch-dependent log_agg/select literals stay per batch).
+        # Column trees are immutable: everything below is a pure function of
+        # (preimage columns, backup projection, backup schema) — build it
+        # once per migration window instead of re-paying the py4j expression
+        # construction on every batch (VERDICT r5 serial-floor theme).
         expr_key = (
             tuple(preimage.columns),
             tuple(sorted(bset)),
@@ -179,6 +181,12 @@ class Changelog:
         base = preimage.where(
             F.col("__matched") | F.col("__op").isin("put", "insert")
         )
+        # The batch id reaches every expression below through the
+        # ``__batch`` column: a replay batch's preimage carries it as data
+        # (its staged partition value), so batch after batch plans the same
+        # generated code; other callers bind it here as a literal.
+        if "__batch" not in base.columns:
+            base = base.withColumn("__batch", F.lit(batch_id).cast("long"))
 
         # SINGLE-PASS marker/dedup logic. The previous shape ran five
         # separate join passes against the log (first-write-wins anti join,
@@ -195,25 +203,25 @@ class Changelog:
             # nothing logged in these buckets yet (e.g. the first batch): no
             # key has a flag, so skip the log aggregation and join entirely
             j = base.select("*", *[
-                F.lit(None).cast("int").alias(c)
-                for c in ("__has_backup", "__has_earlier", "__has_tomb", "__has_reins")
+                F.lit(None).cast("long").alias(c) for c in _LOG_FLAGS
             ])
         else:
-            j = self._flag_join(base, log, log_rows, batch_id)
+            j = self._flag_join(base, log, log_rows)
 
         rows = j.select(
             F.col(key),
+            F.col("__batch"),
             F.explode(F.filter(recs, lambda x: x.isNotNull())).alias("__r"),
         ).select(
             F.col(key),
             F.lit(self.migration_id).alias("migration_id"),
-            F.lit(batch_id).cast("long").alias("batch_id"),
+            F.col("__batch").alias("batch_id"),
             F.col("__r.seq").alias("seq"),
             F.col("__r.kind").alias("kind"),
             F.col("__r.op").alias("op"),
             F.col("__r.matched").alias("matched"),
             F.col("__r.backup").alias("backup"),
-            date.alias("date"),
+            F.timestamp_seconds(F.lit(_EPOCH_S) + F.col("__batch")).alias("date"),
             F.lit(update_query).alias("update_query"),
         )
         n_obs = Observation(f"changelog-b{batch_id}")
@@ -238,35 +246,21 @@ class Changelog:
         # backups; any REAL failure propagates (obsutil narrows the catch)
         return int(observed(n_obs).get("n_backups") or 0)
 
-    def _flag_join(
-        self, base: DataFrame, log: DataFrame, log_rows: int, batch_id: int
-    ) -> DataFrame:
-        """Attach the per-key ``__has_*`` log flags to ``base`` (left join)."""
+    def _flag_join(self, base: DataFrame, log: DataFrame, log_rows: int) -> DataFrame:
+        """Attach each key's log batch ids (``_LOG_FLAGS``) to ``base`` (left
+        join).  The aggregation holds no batch id: the record conditions
+        compare its output with the row's ``__batch``."""
         key = self.target.key_col
-        is_backup = F.col("kind") == KIND_BACKUP
+        kind, b = F.col("kind"), F.col("batch_id")
         log_agg = log.groupBy(key).agg(
-            # any backup row (any batch, incl. a replay of this one) => not fresh
-            F.max(F.when(is_backup, F.lit(1))).alias("__has_backup"),
-            # backup taken in an EARLIER batch => marker candidates apply
-            # (same-batch replays already carry the op in the backup row)
-            F.max(
-                F.when(is_backup & (F.col("batch_id") < batch_id), F.lit(1))
-            ).alias("__has_earlier"),
-            # exact (key, kind, batch) guards make marker replays no-ops
-            F.max(
-                F.when(
-                    (F.col("kind") == KIND_TOMBSTONE)
-                    & (F.col("batch_id") == batch_id),
-                    F.lit(1),
-                )
-            ).alias("__has_tomb"),
-            F.max(
-                F.when(
-                    (F.col("kind") == KIND_REINSERT)
-                    & (F.col("batch_id") == batch_id),
-                    F.lit(1),
-                )
-            ).alias("__has_reins"),
+            # the first backup's batch: any backup (incl. a replay of this
+            # batch) => not fresh; one taken in an EARLIER batch => marker
+            # candidates apply (same-batch replays carry the op in the backup)
+            F.min(F.when(kind == KIND_BACKUP, b)).alias("__backup_b"),
+            # the latest marker of each kind: batches commit in order, so a
+            # marker at or after this batch can only be a replay of it
+            F.max(F.when(kind == KIND_TOMBSTONE, b)).alias("__tomb_b"),
+            F.max(F.when(kind == KIND_REINSERT, b)).alias("__reins_b"),
         )
         # Measured-size broadcast (same principle as MOR_BROADCAST_BYTES):
         # log_agg is a per-key flag frame whose row count the manifest
@@ -281,7 +275,7 @@ class Changelog:
         """Batch-invariant expression trees for :meth:`append_batch`:
         the masked backup struct and the conditional record array (backup /
         tombstone / reinsert). No batch-id literal appears here — the batch
-        conditions are carried by the ``__has_*`` columns computed per batch."""
+        conditions compare the ``_LOG_FLAGS`` columns with ``__batch``."""
         backup_struct = F.when(
             F.col("__matched"),
             F.struct(
@@ -310,10 +304,18 @@ class Changelog:
             )
 
         null_backup = F.lit(None).cast(backup_t)
+        batch = F.col("__batch")
+        # a backup taken in an EARLIER batch (NULL, i.e. false, when none)
+        earlier = F.col("__backup_b") < batch
+
+        def not_yet(marker_b: str) -> Column:
+            """no marker of this kind at or after this batch yet"""
+            return F.col(marker_b).isNull() | (F.col(marker_b) < batch)
+
         recs = F.array(
             # first-write-wins: only keys never backed up for this migration
             F.when(
-                F.col("__has_backup").isNull(),
+                F.col("__backup_b").isNull(),
                 record(
                     KIND_BACKUP, F.col("__op"), F.col("__matched"),
                     backup_struct, seq_col,
@@ -324,8 +326,8 @@ class Changelog:
             F.when(
                 F.col("__matched")
                 & (F.col("__op") == "delete")
-                & F.col("__has_earlier").isNotNull()
-                & F.col("__has_tomb").isNull(),
+                & earlier
+                & not_yet("__tomb_b"),
                 record(
                     KIND_TOMBSTONE, F.lit("delete"), F.lit(True),
                     null_backup, F.lit(None),
@@ -337,8 +339,8 @@ class Changelog:
             F.when(
                 ~F.col("__matched")
                 & F.col("__op").isin("put", "insert")
-                & F.col("__has_earlier").isNotNull()
-                & F.col("__has_reins").isNull(),
+                & earlier
+                & not_yet("__reins_b"),
                 record(
                     KIND_REINSERT, F.lit("insert"), F.lit(False),
                     null_backup, F.lit(None),
@@ -358,8 +360,8 @@ class Changelog:
         preserves every consumer:
 
         - ``_existing_log``: (key, kind, batch_id) set unchanged for backups;
-          markers keep their max batch (the exact-batch dedup guard re-adds
-          a lower-batch marker at most once, harmless by the same aggregate);
+          markers keep their max batch, the only one the append's
+          at-or-after-this-batch marker guard reads;
         - ``rollback_source``: max tombstone/reinsert batch per key unchanged.
 
         At 10^10 events this bounds the per-bucket file count (and marker row

@@ -39,7 +39,7 @@ from ..sources.catalog import Catalog
 from ..sources.laketable import MAX_COMMIT_RETRIES, CommitConflictError, LakeTable
 from .changelog import Changelog
 from .hwm import HwmStore
-from .metrics import MetricsSink
+from .metrics import MetricsSink, codegen_compiles
 from .migration import (
     DELETE_COLLECTION,
     DELETE_OPERATION,
@@ -155,7 +155,7 @@ class MongoBulkDataMigrationSpark:
         with BatchCommit(self, target) as window:
             for i, bsrc in enumerate(batches):
                 batch_id = base_batch + i
-                tb = time.monotonic()
+                tb, cb = time.monotonic(), codegen_compiles(self.spark)
                 m = window.commit(
                     lambda: build_merge_plan(
                         target,
@@ -173,6 +173,7 @@ class MongoBulkDataMigrationSpark:
                 m["batch_id"] = batch_id
                 m["total_entries"] = total
                 m["wall_s"] = round(time.monotonic() - tb, 3)
+                m["codegen_compiles"] = codegen_compiles(self.spark) - cb
                 res.fold(m)
                 sink.emit(m)
                 if cfg.options.throttle_ms:

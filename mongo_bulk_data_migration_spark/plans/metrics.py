@@ -18,6 +18,19 @@ from typing import Any
 log = logging.getLogger("mbdm-spark")
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compilations this driver JVM has run so far: Spark's
+    ``CodegenMetrics`` compilation-time histogram count, read over py4j (no
+    Spark job).  A compile is a generated-class cache miss, so a metrics
+    row's delta of it (``codegen_compiles``) is the batch's new generated
+    classes.  The count is process-wide: it also holds compiles of other
+    threads, e.g. an async MoR compaction overlapping the batch."""
+    return int(
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
+
+
 class MetricsSink:
     def __init__(self, warehouse: str, migration_id: str):
         d = os.path.join(os.path.abspath(warehouse), "_state")

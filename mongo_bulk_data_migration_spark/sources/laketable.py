@@ -53,6 +53,9 @@ DATA_DIR = "data"
 BUCKET_COL = "__b"
 DELETED_COL = "__deleted"  # tombstone flag inside merge-on-read delta files
 DSEQ_COL = "__dseq"        # delta layer sequence (later layers win per key)
+# batch-bound layer sequences are the batch id plus a multiple of this, so
+# the offset literal stays put while batch ids outrun the layer count
+DSEQ_STEP = 1 << 20
 # MoR read: when the un-compacted delta layers measure below this, the
 # shadowed-base anti join broadcasts the delta key set instead of letting the
 # planner shuffle TB-scale base buckets (AQE only sees estimates).
@@ -624,10 +627,17 @@ class LakeTable:
         buckets: Iterable[int],
         operation: str = "merge-mor",
         repartition: bool = True,
+        batch: int | None = None,
     ) -> "PendingCommit":
         """MoR counterpart of :meth:`stage_overwrite_buckets`: write the
         delta-layer files now, commit the manifest later (same crash/race
-        contract — staged files are unreferenced orphans until commit)."""
+        contract — staged files are unreferenced orphans until commit).
+
+        The layer sequence only has to exceed every existing layer's.  With
+        ``batch`` (``df`` then carries it as a ``__batch`` column) it is that
+        column plus an offset rounded up to a multiple of ``DSEQ_STEP``, so
+        consecutive batches plan the same code; otherwise it is the next
+        free number as a literal."""
         bset = set(buckets)
         snap = self._next_snapshot(operation)
         dseq = 1 + max(
@@ -635,7 +645,12 @@ class LakeTable:
         )
         if DELETED_COL not in df.columns:
             df = df.withColumn(DELETED_COL, F.lit(False))
-        df = df.withColumn(DSEQ_COL, F.lit(dseq).cast("long"))
+        if batch is None:
+            df = df.withColumn(DSEQ_COL, F.lit(dseq).cast("long"))
+        else:
+            off = max(0, -(-(dseq - batch) // DSEQ_STEP) * DSEQ_STEP)
+            dseq = batch + off
+            df = df.withColumn(DSEQ_COL, F.col("__batch") + F.lit(off).cast("long"))
         delta_schema = T.StructType(
             list(snap.schema.fields)
             + [T.StructField(DELETED_COL, T.BooleanType(), True),

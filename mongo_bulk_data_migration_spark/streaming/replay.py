@@ -40,7 +40,7 @@ import os
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..functions.tokens import parse_transform, transform_expr
@@ -51,7 +51,7 @@ from ..plans.engine import BatchCommit, MongoBulkDataMigrationSpark, overlap
 from ..plans.engine import SimulatedCrash  # noqa: F401  (re-exported for callers)
 from ..plans.obsutil import observed
 from ..plans.hwm import HwmStore
-from ..plans.metrics import MetricsSink
+from ..plans.metrics import MetricsSink, codegen_compiles
 from ..plans.migration import DataMigrationConfig, MigrationOptions
 from ..sources.catalog import Catalog
 from ..sources.laketable import LakeTable, is_widening
@@ -61,26 +61,32 @@ log = logging.getLogger("mbdm-spark")
 # event columns that $set scalar target columns when non-null
 SCALAR_SET_COLS = ("source", "extra")
 
-# the named-transform DSL grammar (functions/tokens.py)
-VALID_TRANSFORM_RE = r"^(append_eos|set_tokens|(drop_first_k|remap_mod|truncate):[0-9]+)$"
+# the parsed transform DSL (functions/tokens.py: parse_transform), carried
+# per event like seq/part; a NULL name marks a malformed transform
+TRANSFORM_PAIR = ("transform_name", "transform_arg")
+
+# the staged batch id of a stream epoch; its directory is renamed to the
+# epoch id after the write (see _prestage)
+_EPOCH_SLOT = 0
 
 
-def _valid_event_expr():
+def _valid_event_expr(transform_name: Column):
     """B5 validity predicate: which change events are well-formed enough to
-    apply (`AbstractBulkOperationResults.ts:60-73`).  NULL-safe comparisons
-    throughout: a delete event carries NULL transform and NULL tokens, and
-    ``~(col == lit)`` is NULL (not true) for NULL input — with plain equality
-    such rows satisfied NEITHER where(valid) NOR where(~valid) and silently
-    vanished from the batch (caught by the `dead_letter` driver oracle, r3).
+    apply (`AbstractBulkOperationResults.ts:60-73`).  ``transform_name`` is
+    the parsed DSL name: NULL for a transform outside the grammar or with an
+    argument its transform cannot take (``remap_mod:0``, > 2^31-1), which
+    would otherwise fail the whole batch under ANSI mode.  NULL-safe
+    comparisons throughout: a delete event carries NULL transform and NULL
+    tokens, and ``~(col == lit)`` is NULL (not true) for NULL input — with
+    plain equality such rows satisfied NEITHER where(valid) NOR where(~valid)
+    and silently vanished from the batch (caught by the `dead_letter` driver
+    oracle, r3).
     """
     return (
         F.col("op").isin("insert", "update", "delete")
         & (~F.col("op").eqNullSafe("insert") | F.col("tokens").isNotNull())
-        & (
-            F.col("transform").isNull()
-            | F.col("transform").rlike(VALID_TRANSFORM_RE)
-        )
-        & (~F.col("transform").eqNullSafe("set_tokens") | F.col("tokens").isNotNull())
+        & (F.col("transform").isNull() | transform_name.isNotNull())
+        & (~transform_name.eqNullSafe("set_tokens") | F.col("tokens").isNotNull())
     )
 
 
@@ -204,7 +210,7 @@ class ChangeStreamReplayer:
         # schema is fixed for the window once evolution ran above):
         # Column expression trees are immutable and reusable, so the
         # py4j construction cost is paid once per window, not per batch
-        plan_exprs = (self.engine._projected(target), self._value_exprs(target))
+        plan_exprs = (self.engine._projected(target), *self._value_exprs(target))
         # lineage agg == exact per-batch event presence, so the batch
         # range derived from it matches the old bounds observation
         first_b, last_b = min(pre_batches), max(pre_batches)
@@ -236,14 +242,19 @@ class ChangeStreamReplayer:
         forced_batch: int | None = None,
     ) -> dict[int, dict[str, Any]]:
         """Collapse + prepare EVERY batch's merge source in one partitioned
-        write (``__batch=<id>/`` directories), then fold all per-batch stats
-        into two whole-window aggregations:
+        write (``__c_batch=<id>/`` directories), then fold all per-batch
+        stats into two whole-window aggregations:
 
         1. staged stats (per batch): source-key counts + touched
            buckets — replaces the per-batch staging Observation;
         2. raw lineage (per batch, part): event count + max seq — replaces
            the per-batch lineage collect, and is EXACT (the collapsed max
            could only lag it when a key's events span parts).
+
+        Each event's transform is parsed here, once, into the typed
+        ``TRANSFORM_PAIR`` the merge reads; the batch id rides the staged
+        rows as their partition value.  So a batch's plans hold no per-batch
+        literal and batch after batch reuses the same generated classes.
 
         Dead-letter mode (B5, ``continue_on_bulk_write_error``): malformed
         events are split out BEFORE the collapse (a valid earlier event must
@@ -266,14 +277,24 @@ class ChangeStreamReplayer:
         opts = self.config.options
         epb = max(int(events_per_batch), 1)
         # forced_batch: streaming epochs are batch-identified by the stream's
-        # epoch id, not by a seq range — the whole frame IS one batch
-        batch_expr = (
-            F.lit(int(forced_batch)).cast("long")
-            if forced_batch is not None else F.expr(f"seq DIV {epb}")
-        )
+        # epoch id, not by a seq range — the whole frame IS one batch.  Its
+        # plans hold the constant _EPOCH_SLOT, and the staged directory is
+        # renamed to the epoch id below, so every epoch plans the same code
+        forced = forced_batch is not None
+        batch_expr = F.lit(_EPOCH_SLOT).cast("long") if forced else F.expr(f"seq DIV {epb}")
+
+        def batch_of(slot: Any) -> int:
+            return int(forced_batch) if forced else int(slot)
+
         sc.setJobDescription("cdc prestage: collapse+stage all batches")
-        with_b = pending.withColumn("__batch", batch_expr)
-        valid = _valid_event_expr() if opts.continue_on_bulk_write_error else None
+        name, arg = parse_transform(F.col("transform"))
+        with_b = pending.withColumn("__batch", batch_expr).withColumns(
+            dict(zip(TRANSFORM_PAIR, (name, arg)))
+        )
+        valid = (
+            _valid_event_expr(F.col(TRANSFORM_PAIR[0]))
+            if opts.continue_on_bulk_write_error else None
+        )
         live = with_b.where(valid) if valid is not None else with_b
         collapsed = last_wins(
             live,
@@ -285,11 +306,10 @@ class ChangeStreamReplayer:
         src = self._map_ops(collapsed)
         if not opts.bypass_validation:
             check_source_types(target, src)
-        carry = [c for c in ("seq", "transform", "part") if c in src.columns]
+        carry = [c for c in ("seq", "part", *TRANSFORM_PAIR) if c in src.columns]
         prepped = _prep_source(target, src, carry).withColumn(
-            "__batch",
-            F.lit(int(forced_batch)).cast("long")
-            if forced_batch is not None else F.expr(f"__c_seq DIV {epb}"),
+            "__c_batch",
+            F.lit(_EPOCH_SLOT).cast("long") if forced else F.expr(f"__c_seq DIV {epb}"),
         )
         # The raw-lineage aggregation reads only (seq, part) of the PENDING
         # stream — independent of the staging write — so it runs on a driver
@@ -299,7 +319,7 @@ class ChangeStreamReplayer:
         lineage_aggs = [F.count(F.lit(1)).alias("n"), F.max("seq").alias("max_seq")]
         if valid is not None:
             lineage_aggs.append(
-                F.sum(F.when(valid, 0).otherwise(1)).alias("n_dead")
+                F.sum(F.when(_valid_event_expr(name), 0).otherwise(1)).alias("n_dead")
             )
         lrows_q = pending.groupBy(
             batch_expr.alias("__batch"), F.col("part")
@@ -310,20 +330,23 @@ class ChangeStreamReplayer:
             return lrows_q.collect()
 
         def _stage_and_stats() -> list:
-            prepped.write.partitionBy("__batch").mode("overwrite").option(
+            prepped.write.partitionBy("__c_batch").mode("overwrite").option(
                 "compression", "uncompressed"
             ).parquet(out_dir)
             sc.setJobDescription("cdc prestage: per-batch stats")
             staged_all = self.spark.read.schema(prepped.schema).parquet(out_dir)
-            return staged_all.groupBy("__batch").agg(
+            return staged_all.groupBy("__c_batch").agg(
                 F.count(F.lit(1)).alias("n_source_keys"),
                 F.collect_set(F.col(BUCKET_COL)).alias("touched"),
             ).collect()
 
         lrows, srows = overlap(_collect_lineage, _stage_and_stats)
-        batch_schema = T.StructType(
-            [f for f in prepped.schema.fields if f.name != "__batch"]
-        )
+        if forced and srows and forced_batch != _EPOCH_SLOT:
+            # the epoch id enters the data as the directory's partition value
+            os.rename(
+                os.path.join(out_dir, f"__c_batch={_EPOCH_SLOT}"),
+                os.path.join(out_dir, f"__c_batch={int(forced_batch)}"),
+            )
         if valid is not None and any(int(r["n_dead"]) for r in lrows):
             # one partitioned write for the whole window; dynamic partition
             # overwrite keeps dead-letter batches from earlier windows, and
@@ -332,7 +355,10 @@ class ChangeStreamReplayer:
                 self.config.warehouse, "_state", f"deadletter_{self.config.id}"
             )
             sc.setJobDescription("cdc prestage: dead-letter write")
-            with_b.where(~valid).withColumn(
+            dead = with_b.where(~valid).drop(*TRANSFORM_PAIR)
+            if forced:
+                dead = dead.withColumn("__batch", F.lit(int(forced_batch)).cast("long"))
+            dead.withColumn(
                 "__reason", F.lit("malformed-event")
             ).write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
@@ -344,10 +370,11 @@ class ChangeStreamReplayer:
         sc.setJobDescription(None)
         stats: dict[int, dict[str, Any]] = {}
         for r in lrows:
-            b = int(r["__batch"])
+            b = batch_of(r["__batch"])
             st = stats.setdefault(b, {
                 "path": None,  # set below iff the batch staged any rows
-                "schema": batch_schema,
+                "schema": prepped.schema,
+                "batch": b,
                 "touched": [],
                 "static_metrics": {"n_source_keys": 0},
                 "part_hwm": {},
@@ -359,11 +386,12 @@ class ChangeStreamReplayer:
             if valid is not None:
                 st["n_dead"] += int(r["n_dead"])
         for r in srows:
-            st = stats.get(int(r["__batch"]))
+            b = batch_of(r["__c_batch"])
+            st = stats.get(b)
             if st is None:
                 continue  # unreachable: staged rows derive from pending
             st.update(
-                path=os.path.join(out_dir, f"__batch={int(r['__batch'])}"),
+                path=os.path.join(out_dir, f"__c_batch={b}"),
                 touched=sorted(int(x) for x in (r["touched"] or [])),
                 static_metrics={"n_source_keys": int(r["n_source_keys"])},
             )
@@ -392,7 +420,7 @@ class ChangeStreamReplayer:
         pre: dict[str, Any],
         plan_exprs: tuple,
     ) -> dict[str, Any] | None:
-        t0 = time.monotonic()
+        t0, c0 = time.monotonic(), codegen_compiles(self.spark)
         cfg = self.config
 
         marker = target.applied_marker(cfg.id)
@@ -405,7 +433,7 @@ class ChangeStreamReplayer:
             if not part_rows:
                 return None
             part_hwm = {int(r["part"]): int(r["max_seq"]) for r in part_rows}
-            return self._advance(window, t0, batch_id, part_hwm,
+            return self._advance(window, t0, c0, batch_id, part_hwm,
                                  sum(r["n"] for r in part_rows), replayed=True)
 
         # prestaged path (the only path since round 4): evolution hoisted to
@@ -423,7 +451,7 @@ class ChangeStreamReplayer:
             # malformed events forever (livelock, ADVICE r2).  The
             # dead-letter write is idempotent (dynamic partition overwrite),
             # so a crash before this advance replays cleanly.
-            return self._advance(window, t0, batch_id, part_hwm, pre["n_events"],
+            return self._advance(window, t0, c0, batch_id, part_hwm, pre["n_events"],
                                  n_dead_lettered=n_dead)
         t_lineage = time.monotonic() - t0
         phases = window.commit(
@@ -432,8 +460,9 @@ class ChangeStreamReplayer:
                 self.spark,
                 None,
                 update_cols=plan_exprs[0],
-                carry_cols=["seq", "transform", "part"],
+                carry_cols=["seq", "part", *TRANSFORM_PAIR, "batch"],
                 value_exprs=plan_exprs[1],
+                derived_exprs=plan_exprs[2],
                 bypass_validation=cfg.options.bypass_validation,
                 prestaged=pre,
             ),
@@ -442,7 +471,7 @@ class ChangeStreamReplayer:
             update_query=f'{{"cdc_batch": {batch_id}}}',
             marker={"batch_id": batch_id, "max_seq": max(part_hwm.values())},
         )
-        return self._advance(window, t0, batch_id, part_hwm, pre["n_events"],
+        return self._advance(window, t0, c0, batch_id, part_hwm, pre["n_events"],
                              n_dead_lettered=n_dead, lineage_s=round(t_lineage, 4),
                              **phases)
 
@@ -450,6 +479,7 @@ class ChangeStreamReplayer:
         self,
         window: BatchCommit,
         t0: float,
+        c0: int,
         batch_id: int,
         part_hwm: dict[int, int],
         n_events: int,
@@ -457,7 +487,8 @@ class ChangeStreamReplayer:
     ) -> dict[str, Any]:
         """The batch's tail: the ``merge`` crash point, the HWM advance (it
         lags the merge commit, so a crash before it replays the batch into
-        the applied-marker no-op above), then the metrics row."""
+        the applied-marker no-op above), then the metrics row; ``t0``/``c0``
+        are the batch's start time and :func:`codegen_compiles` reading."""
         window.crash_point(batch_id, "merge")
         self.hwm.advance(part_hwm, batch_id)
         wall = time.monotonic() - t0
@@ -473,6 +504,7 @@ class ChangeStreamReplayer:
             "replayed": False,
             "wall_s": round(wall, 4),
             "events_per_sec": round(n_events / wall, 1) if wall > 0 else None,
+            "codegen_compiles": codegen_compiles(self.spark) - c0,
             **row,
         }
         self.metrics.emit(m)
@@ -516,23 +548,20 @@ class ChangeStreamReplayer:
         )
         return src
 
-    def _value_exprs(self, target: LakeTable):
+    def _value_exprs(self, target: LakeTable) -> tuple[dict, dict]:
         """Column expressions for 'update'-op rows, evaluated inside the
         merge join: target columns by name, source (event) columns as
-        __s_<col> / carried columns as __c_<col>."""
-        name, arg = parse_transform(F.col("__c_transform"))
-        new_tokens = F.when(
-            F.col("__c_transform").isNotNull(),
-            transform_expr(F.col("tokens"), name, arg, F.col("__s_tokens")),
-        ).otherwise(F.col("tokens"))
-        exprs = {
-            "tokens": new_tokens.cast(target.schema["tokens"].dataType),
-            "n_tok": F.size(new_tokens).cast("int"),
-        }
+        __s_<col> / carried columns as __c_<col>.  Returns the merge's
+        ``value_exprs`` and ``derived_exprs``: the new token array is
+        computed once per row from the prestage's parsed pair (a NULL
+        name keeps the row's tokens), and ``n_tok`` is its size."""
+        name, arg = (F.col(f"__c_{c}") for c in TRANSFORM_PAIR)
+        new_tokens = transform_expr(F.col("tokens"), name, arg, F.col("__s_tokens"))
+        exprs = {"tokens": new_tokens.cast(target.schema["tokens"].dataType)}
         for c in SCALAR_SET_COLS:
             if c in {f.name for f in target.schema.fields}:
                 exprs[c] = F.coalesce(F.col(f"__s_{c}"), F.col(c))
-        return exprs
+        return exprs, {"n_tok": F.size("__new_tokens").cast("int")}
 
     # ------------------------------------------------------------------
 

@@ -120,3 +120,40 @@ def test_without_flag_malformed_is_noop_not_routed(spark, warehouse):
     ms = rep.apply_changes(spark.createDataFrame(ev, CHANGES_SCHEMA), events_per_batch=10)
     assert ms[0]["n_dead_lettered"] == 0
     assert not os.path.exists(os.path.join(warehouse, "_state", "deadletter_dl2"))
+
+
+def test_runtime_failing_dsl_args_are_dead_lettered(spark, warehouse):
+    """DSL args the grammar admits but the transform cannot take —
+    ``remap_mod:0`` (division by zero) and an arg above 2^31-1 (int
+    overflow) — used to pass the validity check and then fail the whole
+    batch under ANSI mode.  They are dead-lettered; the batch's valid
+    events still apply."""
+    cat = Catalog(warehouse)
+    t = cat.create_table("seq", SEQUENCES_SCHEMA, num_buckets=4)
+    rows = make_sequences(5)
+    t.append(spark.createDataFrame(rows, SEQUENCES_SCHEMA))
+    ev = [
+        dict(seq=0, part=0, op="update", doc_id="doc00000001", tokens=None,
+             transform="remap_mod:0", source=None, extra=None),            # div by 0
+        dict(seq=1, part=0, op="update", doc_id="doc00000002", tokens=None,
+             transform="truncate:2147483648", source=None, extra=None),    # > int32
+        dict(seq=2, part=0, op="update", doc_id="doc00000003", tokens=None,
+             transform="remap_mod:7", source=None, extra=None),            # valid
+        dict(seq=3, part=0, op="update", doc_id="doc00000004", tokens=None,
+             transform="append_eos", source=None, extra=None),             # valid
+    ]
+    rep = ChangeStreamReplayer(
+        spark, warehouse, "seq", "dl4",
+        options=MigrationOptions(continue_on_bulk_write_error=True),
+    )
+    ms = rep.apply_changes(spark.createDataFrame(ev, CHANGES_SCHEMA), events_per_batch=100)
+    assert ms[0]["n_dead_lettered"] == 2
+
+    got = {r["doc_id"]: r for r in rows_of(cat.load_table("seq").read(spark))}
+    assert got["doc00000001"]["tokens"] == rows[1]["tokens"]
+    assert got["doc00000002"]["tokens"] == rows[2]["tokens"]
+    assert got["doc00000003"]["tokens"] == [x % 7 for x in rows[3]["tokens"]]
+    assert got["doc00000004"]["tokens"] == rows[4]["tokens"] + [50256]
+    dl = os.path.join(warehouse, "_state", "deadletter_dl4")
+    dead = spark.read.parquet(dl).where("__batch = 0")
+    assert set(dead.select("doc_id").toPandas()["doc_id"]) == {"doc00000001", "doc00000002"}

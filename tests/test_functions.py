@@ -56,6 +56,35 @@ def test_apply_token_transform_maintains_n_tok(spark):
     assert out["n_tok"] == 2
 
 
+def test_parse_transform_grammar_and_arg_bounds(spark):
+    """The parse accepts exactly the DSL grammar with arguments its
+    transform can take; anything else parses to a NULL name, which
+    ``transform_expr`` treats as a no-op instead of failing under ANSI."""
+    cases = {
+        "append_eos": ("append_eos", TOKENS + [EOS_TOKEN]),
+        "drop_first_k:2": ("drop_first_k", TOKENS[2:]),
+        "drop_first_k:2147483647": ("drop_first_k", []),
+        "truncate:0": ("truncate", []),
+        "remap_mod:7": ("remap_mod", [t % 7 for t in TOKENS]),
+        "remap_mod:0": (None, TOKENS),
+        "remap_mod:2147483648": (None, TOKENS),
+        "truncate:": (None, TOKENS),
+        "truncate:5:7": (None, TOKENS),
+        "truncate:-3": (None, TOKENS),
+        "append_eos:3": (None, TOKENS),
+        "bogus:1": (None, TOKENS),
+    }
+    df = spark.createDataFrame(
+        [(TOKENS, dsl) for dsl in cases], "tokens array<int>, transform string"
+    )
+    name, arg = parse_transform(F.col("transform"))
+    got = df.select(
+        "transform", name.alias("name"),
+        transform_expr(F.col("tokens"), name, arg, F.lit(None)).alias("t"),
+    ).collect()
+    assert {r["transform"]: (r["name"], list(r["t"])) for r in got} == cases
+
+
 # ---------------------------------------------------------------------------
 # nested / positional updates (M1/M2/M5)
 # ---------------------------------------------------------------------------
