@@ -41,8 +41,8 @@ HEADLINE = [
 ]
 
 
-def _host_probe_io(size_mb: int = 64) -> float:
-    """Scratch-FS write probe (MB/s) — see jobs/scaling_bench.host_probe_io."""
+def _scratch_write_mbps(size_mb: int = 64) -> float:
+    """Scratch-FS write probe (MB/s): ``size_mb`` of random bytes, fsynced."""
     import tempfile
 
     buf = os.urandom(1 << 20)
@@ -130,13 +130,13 @@ def wait_for_window(per_core_mops: float, tag: str, gates: list[dict]) -> bool:
     return False
 
 
-class _LegSampler:
-    """During-run host-capacity sampler (mid-leg-shear instrument, same rule
-    as jobs/scaling_bench.py): the window gate only checks BEFORE a timed
-    leg, but the scheduler can collapse mid-replay (observed: pre-probes
-    195-216 Mops, end probe 69, attempts at 5.3k ev/s where a held window
-    measures 10-14k).  An 8-proc sub-second sample every ~45 s makes each
-    attempt classifiable as held/sheared in the artifact itself."""
+class _HoldSampler:
+    """During-run host-capacity sampler (mid-leg-shear instrument): the
+    window gate only checks BEFORE a timed leg, but the scheduler can
+    collapse mid-replay (observed: pre-probes 195-216 Mops, end probe 69,
+    attempts at 5.3k ev/s where a held window measures 10-14k).  An 8-proc
+    sub-second sample every ~45 s makes each attempt classifiable as
+    held/sheared in the artifact itself."""
 
     N_PROC, WORK, INTERVAL_S = 8, 1_000_000, 45.0
 
@@ -150,9 +150,9 @@ class _LegSampler:
     def _loop(self) -> None:
         while not self._stop.is_set():
             try:
-                # median of 3 quick probes (see jobs/scaling_bench.LegSampler:
-                # one sub-second probe can read falsely low and misclassify
-                # an attempt; sustained collapse reads low in all three)
+                # median of 3 quick probes: one sub-second probe can read
+                # falsely low and misclassify an attempt; sustained collapse
+                # reads low in all three
                 trio = []
                 for _ in range(3):
                     trio.append(_host_probe(self.N_PROC, self.WORK))
@@ -163,7 +163,7 @@ class _LegSampler:
                 pass
             self._stop.wait(self.INTERVAL_S)
 
-    def __enter__(self) -> "_LegSampler":
+    def __enter__(self) -> "_HoldSampler":
         self._t.start()
         return self
 
@@ -173,9 +173,9 @@ class _LegSampler:
 
 
 def _spark_cpu_attributor():
-    """Window-scoped spark-process CPU sampler (shared with the cluster
-    harness).  In this in-process local[N] bench the SparkSubmit JVM is both
-    driver and executor; python workers are its pyspark.daemon children.
+    """Window-scoped spark-process CPU sampler (shared with perfbench).  In
+    this in-process local[N] bench the SparkSubmit JVM is both driver and
+    executor; python workers are its pyspark.daemon children.
     Tree-scoped to THIS process so concurrent spark work cannot leak in."""
     sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "jobs"))
     from cluster_scaling import _CpuAttributor
@@ -212,7 +212,7 @@ def _cdc_once(spark, n_docs: int, n_events: int, run_id: str) -> dict:
         rep = ChangeStreamReplayer(spark, wh, "sequences", run_id, evolve_schema=False)
         attrib = _spark_cpu_attributor()
         t1 = time.monotonic()
-        with _LegSampler() as sampler:
+        with _HoldSampler() as sampler:
             metrics = rep.apply_changes(events, events_per_batch=max(n_events // N_BATCHES, 1))
         replay_s = time.monotonic() - t1
         cpu_s = attrib.stop()
@@ -269,9 +269,9 @@ def bench_cdc(spark, per_core_mops: float, gates: list[dict]) -> dict:
     n_docs_base = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet")).count()
     n_docs = n_docs_base * DOCS_MULT
     n_events = n_docs * EVENTS_PER_DOC
-    # pre-registered during-run hold bar (same rule as scaling_bench): every
-    # mid-run 8-proc sample must stay above frac x the session's expected
-    # 8-proc capacity, else the attempt is marked sheared in the artifact
+    # pre-registered during-run hold bar: every mid-run 8-proc sample must
+    # stay above frac x the session's expected 8-proc capacity, else the
+    # attempt is marked sheared in the artifact
     bar8 = round(GATE_FRAC * _expect_speedup(8) * per_core_mops, 1)
 
     def _classify(a: dict) -> dict:
@@ -345,7 +345,7 @@ def main() -> None:
         "bench_detail": {
             "cdc": cdc,
             "host_mops": {"1p": per_core, f"{CPUS}p": _host_probe(CPUS)},
-            "host_io_mbps": _host_probe_io(),
+            "host_io_mbps": _scratch_write_mbps(),
             "window_gate": {
                 "per_core_mops": per_core,
                 "frac": GATE_FRAC,

@@ -1,172 +1,25 @@
-"""Multi-executor scaling evidence: spark-submit on local-cluster[N] vs [4N].
+"""Per-role CPU accounting for a Spark process tree.
 
-Supplements :mod:`jobs.scaling_bench` (the headline pinned ``local[N]``
-pairs): the north rule's deployment shape is ``spark-submit --py-files`` on
-a cluster at two cluster sizes.  ``local-cluster[N,c,mem]`` launches N REAL
-executor JVMs — distinct processes, so package distribution, task
-serialization, broadcast and shuffle all cross process boundaries — the
-closest sandbox analog to an N-executor cluster.  Round-4 topology fix: the
-pair scales EXECUTOR COUNT (N vs 4N executors of ``--exec-cores`` each,
-matching the rule's "N and 4N executors"), while the driver tree keeps a
-CONSTANT ``--driver-cores`` allotment in both legs and executor JVMs are
-re-pinned onto the executor core range as they appear — the analog of a
-real cluster's separate driver node.  The pre-round-4 harness pinned
-driver+executors together to ``n_exec`` 1-core budgets, so the driver's
-serial work (Catalyst, codegen, py4j, job dispatch) was squeezed
-asymmetrically — that topology artifact, not the engine's plan, produced
-the 0.3-0.5 efficiencies in the early history rows (n_exec 1 vs 4).
-Protocol otherwise matches the headline harness: input generated ONCE and
-copied per leg, legs run back-to-back in fresh JVM trees, each pair behind
-the pre-registered host-window gate, median pair efficiency reported.
+``_CpuAttributor`` samples ``/proc/<pid>/stat`` every 0.5 s for the Spark
+processes below a root pid and sums their CPU-seconds by role: the driver
+JVM (``SparkSubmit``), executor JVMs (``CoarseGrainedExecutorBackend``) and
+Python workers (``pyspark.daemon`` / ``pyspark.worker``).  With a
+``t0_marker`` path the totals are counted from the first scan that sees the
+marker, so a caller can exclude start-up and warm-up.
 
-Run:  python jobs/cluster_scaling.py [--docs 100000] [--events-per-doc 8]
-Writes BENCH/CLUSTER.md + appends raw rows to BENCH/cluster_runs.jsonl.
+``perfbench/run.py`` (the gated ``cpu_s_per_op``) and ``bench.py`` import it
+with this directory on ``sys.path``:
+
+    from cluster_scaling import _CpuAttributor
+    a = _CpuAttributor(t0_marker=os.devnull, root_pid=os.getpid())
+    a.start()
+    ...
+    cpu_s = a.stop()   # {"driver": s, "exec": s, "py": s}
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
-import shutil
-import statistics
-import subprocess
-import sys
-import tempfile
-import time
-import zipfile
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from scaling_bench import (  # noqa: E402
-    LegSampler,
-    _git_commit,
-    host_probe,
-    host_probe_io,
-)
-
-SPARK_SUBMIT = os.path.join(
-    os.path.dirname(os.path.dirname(shutil.which("python") or sys.executable)),
-    "bin", "spark-submit",
-)
-if not os.path.exists(SPARK_SUBMIT):
-    SPARK_SUBMIT = shutil.which("spark-submit") or "spark-submit"
-
-
-def hold_bar(busy_cores: int, per_core: float, frac: float) -> float:
-    """Footprint-adjusted during-leg hold bar.
-
-    The sandbox VM's DELIVERABLE capacity is concave in process count —
-    measured speedup(P) ~= P^0.84 x single-proc (32 procs deliver only
-    ~18.4 cores' worth).  A leg pinned to B cores therefore legitimately
-    depresses the 8-proc mid-leg sample: under fair scheduling the sampler
-    expects its share (8/(B+8)) of capacity((B+8)) — NOT the idle 8-proc
-    capacity the flat scaling_bench bar assumes (that bar is correct for
-    its own <=4-core legs; an 18-core cluster leg would shear on every
-    sample).  At B=0 this degenerates to frac x 8^0.84 x per_core =
-    frac x 5.74 x per_core, i.e. the shared EIGHT_PROC_SPEEDUP bar."""
-    total = busy_cores + 8
-    return round(frac * (8.0 / total) * (total ** 0.84) * per_core, 1)
-
-
-def zip_pkg(tmp: str) -> str:
-    zpath = os.path.join(tmp, "mbdm.zip")
-    pkg = os.path.join(REPO, "mongo_bulk_data_migration_spark")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _dirs, files in os.walk(pkg):
-            for fn in files:
-                if fn.endswith(".py"):
-                    p = os.path.join(root, fn)
-                    z.write(p, os.path.relpath(p, REPO))
-    return zpath
-
-
-def prep_input(tmp: str, docs: int, events_per_doc: int,
-               buckets: int = 8) -> tuple[str, str, int]:
-    """Generate the deterministic table + event log once (local[4] session).
-
-    ``buckets`` sizes the table's hash-bucket layout — the parallelism
-    ceiling of every bucket-bound stage (pruned scans, the bucket-aligned
-    final write, changelog appends).  The headline local[N] workload runs
-    32 buckets; pre-round-5 cluster rows ran a hardcoded 8, which capped
-    those stages at 8-way and let skewed hot buckets straggle the 4N leg
-    (measured 2026-08-19: exec_busy_frac 0.447 on a tmpfs workdir — i.e.
-    NOT disk — at 8 buckets).  A real deployment sizes buckets to the
-    cluster; rows carry ``buckets`` so groups are compared like-for-like.
-    """
-    from mongo_bulk_data_migration_spark import Catalog
-    from mongo_bulk_data_migration_spark.session import get_spark
-    from mongo_bulk_data_migration_spark.sources.fixtures import (
-        SEQUENCES_SCHEMA, changes_df, sequences_df)
-
-    n_events = docs * events_per_doc
-    spark = get_spark(app_name="cluster-prep", master="local[4]", shuffle_partitions=4)
-    wh = os.path.join(tmp, "wh0")
-    cat = Catalog(wh)
-    t = cat.create_table("sequences", SEQUENCES_SCHEMA, num_buckets=buckets)
-    t.append(sequences_df(spark, docs, parallelism=4))
-    ev_dir = os.path.join(tmp, "events")
-    changes_df(spark, docs, n_events, n_parts=4, parallelism=4).write.parquet(ev_dir)
-    spark.stop()
-    return wh, ev_dir, n_events
-
-
-class _ExecutorRepinner:
-    """Pin executor processes to the executor core budget, leaving the
-    driver JVM on its own fixed allotment.
-
-    ``taskset`` on the whole ``spark-submit`` tree (the pre-round-4 harness)
-    made the driver COMPETE with executors for the leg's core budget — with
-    1-core executors the N=1 leg ran driver+executor on a single core.  A
-    real cluster gives the driver its own node, so the honest sandbox analog
-    is: launch the tree pinned to a constant driver-core range (same in BOTH
-    legs of a pair), then move each executor JVM (and any pyspark daemons it
-    forks before re-pin) onto the executor range ``0..E-1`` as it appears.
-    Children forked after re-pin inherit the executor affinity, so Arrow/
-    pandas UDF workers land on executor cores too."""
-
-    def __init__(self, exec_cpus: str):
-        import threading
-
-        self.exec_cpus = exec_cpus
-        self.pinned: list[int] = []
-        self._seen: set[str] = set()
-        self._stop = threading.Event()
-        self._t = threading.Thread(target=self._loop, daemon=True)
-
-    def start(self) -> None:
-        self._t.start()
-
-    def stop(self) -> list[int]:
-        self._stop.set()
-        self._t.join(timeout=5)
-        return self.pinned
-
-    def _loop(self) -> None:
-        while not self._stop.is_set():
-            try:
-                for pid in os.listdir("/proc"):
-                    if not pid.isdigit() or pid in self._seen:
-                        continue
-                    try:
-                        with open(f"/proc/{pid}/cmdline", "rb") as f:
-                            cmd = f.read().decode("utf-8", errors="replace")
-                    except OSError:
-                        continue
-                    if ("CoarseGrainedExecutorBackend" in cmd
-                            or "pyspark.daemon" in cmd):
-                        r = subprocess.run(
-                            ["taskset", "-cp", self.exec_cpus, pid],
-                            capture_output=True,
-                        )
-                        self._seen.add(pid)
-                        if r.returncode == 0:
-                            self.pinned.append(int(pid))
-            except Exception:
-                pass
-            self._stop.wait(0.5)
 
 
 class _CpuAttributor:
@@ -345,551 +198,3 @@ class _CpuAttributor:
             except Exception:
                 pass
             self._stop.wait(0.5)
-
-
-def run_leg(tmp: str, zpath: str, wh0: str, ev_dir: str, n_exec: int,
-            events_per_batch: int, tag: str, exec_mb: int = 2048,
-            exec_cores: int = 2, driver_cores: int = 2,
-            warmup_events: int = 0, shuffle_partitions: int | None = None) -> dict:
-    wh = os.path.join(tmp, f"wh_{tag}")
-    shutil.copytree(wh0, wh)
-    e_total = n_exec * exec_cores
-    # default: scale partitions with the leg's cores.  Passing an explicit
-    # count keeps the JOB identical across both legs of a pair (the
-    # standard scaling-experiment design: constant work, scaled resources —
-    # AQE still coalesces where the small leg would over-partition)
-    parts = shuffle_partitions or max(4 * e_total, 16)
-    cmd = [
-        SPARK_SUBMIT, "--master", f"local-cluster[{n_exec},{exec_cores},{exec_mb}]",
-        "--driver-memory", "2g",
-        # more shuffle partitions than cores: AQE coalesces small stages
-        # back down, while multi-million-event batches keep per-task state
-        # bounded instead of building 1-2 GB partitions on the small leg
-        "--conf", f"spark.sql.shuffle.partitions={parts}",
-        # shuffle/spill files follow the workdir: a tmpfs workdir must take
-        # the shared disk out of the SHUFFLE path too, not just the tables
-        "--conf", f"spark.local.dir={os.path.join(tmp, 'sparklocal_' + tag)}",
-        # delay scheduling OFF (round 5): with the default 3s locality wait
-        # every post-shuffle wave idles cores waiting for "preferred"
-        # executors — a penalty ONLY the multi-executor leg pays (a single
-        # executor is always process-local), measured 2026-08-19 as the 4N
-        # leg's executors idling ~53% on a tmpfs workdir (not disk) at both
-        # 8 and 32 buckets.  Shuffle-bound ETL reads its shuffle blocks
-        # remotely regardless; 0s is the standard setting for this shape.
-        "--conf", "spark.locality.wait=0s",
-        "--conf", "spark.ui.enabled=false",
-        f"--conf", f"spark.executor.memory={exec_mb}m",
-        # size each JVM's ergonomics (GC worker threads, JIT compiler
-        # threads, common pool) for its REAL core budget: the taskset repin
-        # lands after JVM start, so without this every executor sizes those
-        # pools for all 32 host cores and then gets squeezed onto
-        # exec_cores — the 4N leg pays that overhead 4x.  On a real cluster
-        # the container's cgroup cpuset does exactly this scoping.
-        "--conf", ("spark.executor.extraJavaOptions="
-                   f"-XX:ActiveProcessorCount={exec_cores}"),
-        "--driver-java-options", f"-XX:ActiveProcessorCount={driver_cores}",
-        "--py-files", zpath,
-        os.path.join(REPO, "jobs", "replay_job.py"),
-        "--warehouse", wh, "--table", "sequences", "--migration-id", f"cs-{tag}",
-        "--events", ev_dir, "--events-per-batch", str(events_per_batch),
-        "--no-evolve-schema",
-        "--warmup-events", str(warmup_events),
-        "--t0-marker", os.path.join(tmp, f"t0_{tag}"),
-    ]
-    repin = None
-    if shutil.which("taskset"):
-        # driver tree on its constant allotment; executors re-pinned to 0..E-1
-        drv = f"{e_total}-{e_total + driver_cores - 1}"
-        cmd = ["taskset", "-c", drv] + cmd
-        repin = _ExecutorRepinner(f"0-{e_total - 1}")
-        repin.start()
-    t0 = time.monotonic()
-    sampler = LegSampler()
-    sampler.start()
-    # tree-scope the attributor to THIS leg's spark-submit process tree so
-    # unrelated spark work on the host can never contaminate cpu_s (the
-    # CPU-normalized N->4N ratio is the primary scaling figure from round 5)
-    proc = subprocess.Popen(cmd, stdout=subprocess.PIPE,
-                            stderr=subprocess.PIPE, text=True)
-    attrib = _CpuAttributor(t0_marker=os.path.join(tmp, f"t0_{tag}"),
-                            root_pid=proc.pid)
-    attrib.start()
-    try:
-        try:
-            out_s, err_s = proc.communicate(timeout=3600)
-        except subprocess.TimeoutExpired:
-            proc.kill()
-            proc.communicate()
-            raise
-        r = subprocess.CompletedProcess(cmd, proc.returncode, out_s, err_s)
-    finally:
-        during = sampler.stop()
-        cpu_s = attrib.stop()
-        n_repinned = len(repin.stop()) if repin is not None else 0
-    submit_wall = time.monotonic() - t0
-    shutil.rmtree(wh, ignore_errors=True)
-    if r.returncode != 0:
-        sys.stderr.write(r.stdout[-2000:] + "\n" + r.stderr[-3000:])
-        raise RuntimeError(f"leg {tag} failed")
-    out = json.loads(r.stdout.strip().splitlines()[-1])
-    out["n_exec"] = n_exec
-    out["exec_cores"] = exec_cores
-    out["driver_cores"] = driver_cores
-    out["shuffle_parts"] = parts
-    out["parts_fixed"] = shuffle_partitions is not None
-    out["warmup_events"] = warmup_events
-    out["n_repinned"] = n_repinned
-    out["submit_wall_s"] = round(submit_wall, 2)
-    out["during_probe_mops"] = during
-    out["cpu_s"] = cpu_s
-    out["io_mb"] = attrib.io_mb()
-    # IO caveat (measured 2026-08-19, control experiment in CLUSTER.md):
-    # this sandbox kernel charges a reaped child's /proc io to its parent,
-    # and executor JVMs are children of the driver JVM in local-cluster
-    # mode — a driver row sampled after executors exit therefore INCLUDES
-    # their io.  CPU columns are unaffected (utime/stime stay self-only).
-    io = out["io_mb"]
-    if "driver" in io and "exec" in io:
-        out["io_driver_self_est_mb"] = {
-            k: round(max(io["driver"].get(k, 0.0)
-                         - io["exec"].get(k, 0.0)
-                         - io.get("py", {}).get(k, 0.0), 0.0), 1)
-            for k in ("w_mb", "r_mb", "disk_w_mb", "disk_r_mb")
-        }
-    wall = out.get("wall_s") or submit_wall
-    out["exec_busy_frac"] = round(
-        (cpu_s["exec"] + cpu_s["py"]) / (wall * e_total), 3
-    ) if wall else None
-    # primary round-5 figure: events per executor-CPU-second (exec JVMs +
-    # python workers, timed-window scoped).  A starved host stretches wall
-    # but the work's CPU-seconds stay ~constant, so this divides the host
-    # window out of the N->4N comparison (pre-registered in CLUSTER.md)
-    exec_cpu = cpu_s.get("exec", 0.0) + cpu_s.get("py", 0.0)
-    out["exec_cpu_s"] = round(exec_cpu, 1)
-    out["ev_per_exec_cpu_s"] = (
-        round(out["events"] / exec_cpu, 1) if exec_cpu else None)
-    return out
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--docs", type=int, default=400000,
-                    help="default sized so n_events=3.2M matches the "
-                         "headline local[N] group that carries the >=0.8 "
-                         "claim, while keeping legs short enough that the "
-                         "during-leg hold rule samples a single host window")
-    ap.add_argument("--events-per-doc", type=int, default=8)
-    ap.add_argument("--batches", type=int, default=2)
-    ap.add_argument("--n-exec", type=int, default=1)
-    ap.add_argument("--exec-cores", type=int, default=2,
-                    help="cores per executor (same in both legs; the pair "
-                         "scales EXECUTOR COUNT N->4N, the real-cluster axis)")
-    ap.add_argument("--driver-cores", type=int, default=4,
-                    help="constant driver-core allotment in BOTH legs "
-                         "(analog of the separate driver node; measured "
-                         "2026-08-19: the driver JVM burns ~68 CPU-s/leg of "
-                         "Catalyst/codegen/RPC — squeezing it to 2 cores "
-                         "made a 16-exec-core leg 3.6x slower, i.e. the old "
-                         "harness measured driver starvation, not executor "
-                         "scaling).  Defaults sized so the 4N leg's total "
-                         "footprint (4*2+4=12) fits the VM's ~18-core "
-                         "deliverable capacity")
-    ap.add_argument("--repeats", type=int, default=3)
-    ap.add_argument("--shuffle-partitions", type=int, default=None,
-                    help="fix spark.sql.shuffle.partitions to the SAME "
-                         "value in both legs (constant job, scaled "
-                         "resources); default scales with the leg's cores")
-    ap.add_argument("--window-gate-frac", type=float, default=0.7)
-    ap.add_argument("--exec-mb", type=int, default=4096)
-    ap.add_argument("--window-wait-s", type=int, default=60)
-    ap.add_argument("--window-max-waits", type=int, default=10)
-    ap.add_argument("--warmup-events", type=int, default=400_000,
-                    help="untimed JIT/codegen warmup replay per leg "
-                         "(replay_job --warmup-events): executors in the "
-                         "deploy shape are long-running, so fresh-JVM legs "
-                         "must not charge per-executor warmup to the "
-                         "measurement (CPU attribution 2026-08-19: 4-exec "
-                         "leg burned ~2x the executor CPU-s of the 1-exec "
-                         "leg on identical input, exec_busy_frac 0.46 vs "
-                         "1.09 — replicated warmup + cold-start, not "
-                         "steady-state work)")
-    ap.add_argument("--workdir", default=None,
-                    help="root for input/warehouse/scratch dirs (default: a "
-                         "system tempdir on the VM's single disk).  Pass a "
-                         "tmpfs path (e.g. /dev/shm/cs) to take the shared "
-                         "disk OUT of the pair: the 2026-08-19 IO/CPU "
-                         "attribution showed the 4N leg's executors idle "
-                         "~55% against a saturated single disk (a sandbox "
-                         "artifact — real clusters scale disks with nodes); "
-                         "the tmpfs variant isolates compute+shuffle "
-                         "scaling, rows carry workdir_fs=tmpfs")
-    ap.add_argument("--log-path", default=None,
-                    help="override the raw-history jsonl (smoke tests write "
-                         "to a scratch path so BENCH history stays clean)")
-    ap.add_argument("--buckets", type=int, default=8,
-                    help="table hash-bucket count (see prep_input docstring:"
-                         " 8 = pre-round-5 rows, 32 = headline local[N]"
-                         " workload shape)")
-    args = ap.parse_args()
-    xn = 4 * args.n_exec
-    n_events = args.docs * args.events_per_doc
-    epb = max(n_events // args.batches, 1)
-    commit = _git_commit()
-
-    if args.workdir:
-        os.makedirs(args.workdir, exist_ok=True)
-        tmp = tempfile.mkdtemp(prefix="cluster_scale_", dir=args.workdir)
-    else:
-        tmp = tempfile.mkdtemp(prefix="cluster_scale_")
-    import subprocess as _sp
-    fs_type = _sp.run(["stat", "-f", "-c", "%T", tmp],
-                      capture_output=True, text=True).stdout.strip() or "?"
-    log_path = args.log_path or os.path.join(REPO, "BENCH", "cluster_runs.jsonl")
-    pairs = []
-    try:
-        zpath = zip_pkg(tmp)
-        wh0, ev_dir, n_events = prep_input(tmp, args.docs, args.events_per_doc,
-                                           buckets=args.buckets)
-        per_core = host_probe(1, 8_000_000)
-        for i in range(args.repeats):
-            # gate on the 4N leg's TOTAL footprint (executor cores + driver),
-            # scaled by the host's measured sublinear parallel-speedup curve:
-            # speedup(P) ~= P^0.84 fits this sandbox across sessions
-            # (8 -> 5.74 ~ the round-1 EIGHT_PROC_SPEEDUP probe of 5.7;
-            # 18 -> 11.3 and 32 -> 18.4 match a 2026-08-19 remeasure of
-            # 11.55 / 18.36).  Demanding a LINEAR P x per-core bar (the
-            # pre-fix formula) is unattainable at P >= 18 even on an idle
-            # host, so the gate would starve forever.
-            total_4n = xn * args.exec_cores + args.driver_cores
-            need = args.window_gate_frac * (total_4n ** 0.84) * per_core
-            gate_passed = False
-            for w in range(args.window_max_waits + 1):
-                gate = host_probe(min(total_4n, 32))
-                if gate >= need:
-                    gate_passed = True
-                    break
-                print(json.dumps({"window_gate": {"pair": i, "probe_mops": gate,
-                                                  "need_mops": round(need, 1),
-                                                  "wait": w}}), flush=True)
-                time.sleep(args.window_wait_s)
-            if not gate_passed:
-                # round 5: a dirty window no longer skips the pair — the
-                # primary cpu_eff metric divides the window out; the pair
-                # just cannot count toward the (secondary) wall-eff median
-                print(json.dumps({"window_gate_exhausted": {"pair": i}}),
-                      flush=True)
-            # host per-proc ceiling between the two leg footprints
-            # (pre-registered round-5 addendum, see CLUSTER.md): the same
-            # pure-CPU probe at fp_N and fp_4N processes, back-to-back.  A
-            # perfectly-scaling job cannot show cpu_eff above this window's
-            # ceiling — each CPU-second at the wider footprint does less
-            # work on a contended host — so the ceiling contextualizes
-            # cpu_eff without replacing the >=0.8 criterion.
-            fp_n = args.n_exec * args.exec_cores + args.driver_cores
-            fp_4n = xn * args.exec_cores + args.driver_cores
-            hp_n = host_probe(min(fp_n, 32))
-            hp_4n = host_probe(min(fp_4n, 32))
-            host_ceiling = round((hp_4n / min(fp_4n, 32))
-                                 / (hp_n / min(fp_n, 32)), 3)
-            host_par = {"fp_n": fp_n, "mops_n": hp_n,
-                        "fp_4n": fp_4n, "mops_4n": hp_4n,
-                        "ceiling": host_ceiling}
-            p0 = host_probe()
-            r_n = run_leg(tmp, zpath, wh0, ev_dir, args.n_exec, epb, f"p{i}n",
-                          args.exec_mb, args.exec_cores, args.driver_cores,
-                          args.warmup_events, args.shuffle_partitions)
-            p1 = host_probe()
-            r_4n = run_leg(tmp, zpath, wh0, ev_dir, xn, epb, f"p{i}x",
-                           args.exec_mb, args.exec_cores, args.driver_cores,
-                           args.warmup_events, args.shuffle_partitions)
-            p2 = host_probe()
-            eff = (r_4n["events_per_sec"] / r_n["events_per_sec"]) / (xn / args.n_exec)
-            # pre-registered during-leg hold rule, footprint-adjusted per leg
-            # (see hold_bar: the 4N leg's own pinned cores depress the
-            # sampler's fair share — the flat scaling_bench bar would shear
-            # every large-footprint leg on a VM delivering ~18 cores' worth)
-            held = True
-            for leg, nx in ((r_n, args.n_exec), (r_4n, xn)):
-                busy = nx * args.exec_cores + args.driver_cores
-                bar = hold_bar(busy, per_core, args.window_gate_frac)
-                leg_held = min(leg.get("during_probe_mops") or [bar]) >= bar
-                leg["held_bar_mops"] = bar
-                leg["leg_held"] = leg_held
-                held = held and leg_held
-            for leg in (r_n, r_4n):
-                leg["held"] = held
-            for leg in (r_n, r_4n):
-                leg["host_par_probe"] = host_par
-            pair = {"n": r_n, "4n": r_4n, "eff": round(eff, 3),
-                    "probes": [p0, p1, p2], "held": held,
-                    "host_par_probe": host_par}
-            pairs.append(pair)
-            os.makedirs(os.path.dirname(log_path), exist_ok=True)
-            with open(log_path, "a") as f:
-                for r, pr in ((r_n, [p0, p1]), (r_4n, [p1, p2])):
-                    f.write(json.dumps({**r, "n_docs": args.docs,
-                                        "n_events": n_events, "commit": commit,
-                                        "pair": i, "gate_passed": gate_passed,
-                                        "host_probe_mops": pr,
-                                        "host_io_mbps": host_probe_io(),
-                                        "workdir_fs": fs_type,
-                                        "buckets": args.buckets,
-                                        "mode": "local-cluster", "pinned": True}) + "\n")
-            print(json.dumps(pair), flush=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    if not pairs:
-        sys.stderr.write("no pairs ran this session (window gate never passed)\n")
-    if args.log_path is None:
-        write_report(log_path)  # standing report only from the standing log
-    else:
-        print(json.dumps({"smoke_log": log_path, "md_written": False}), flush=True)
-
-
-def write_report(log_path: str) -> None:
-    """Rebuild BENCH/CLUSTER.md from the FULL raw history, every run.
-
-    A session whose every pair sheared must not overwrite clean evidence
-    from an earlier window with scheduler noise — the report always shows
-    all pair groups, classifies each pair (held / SHEARED / no-sampler for
-    pre-sampler rows), and takes each group's median over held pairs only.
-    """
-    rows = []
-    if os.path.exists(log_path):
-        with open(log_path) as f:
-            rows = [json.loads(ln) for ln in f if ln.strip()]
-    by_pair: dict[tuple, dict] = {}
-    for r in rows:
-        k = (r["n_events"], r["commit"], r["pair"])
-        by_pair.setdefault(k, {})[r["n_exec"]] = r
-    groups: dict[tuple, list] = {}
-    for (n_events, commit, pidx), legs in sorted(by_pair.items()):
-        ns = sorted(legs)
-        if len(ns) != 2 or ns[1] != 4 * ns[0]:
-            continue  # interrupted pair
-        lo, hi = legs[ns[0]], legs[ns[1]]
-        eff = (hi["events_per_sec"] / lo["events_per_sec"]) / (ns[1] / ns[0])
-        sampled = "during_probe_mops" in lo or "during_probe_mops" in hi
-        held = lo.get("held", None) if sampled else None
-        cls = ("held" if held else "SHEARED") if sampled else "no-sampler"
-        # CPU-normalized efficiency (round 5, pre-registered): ratio of
-        # events per executor-CPU-second 4N vs N.  Valid on held AND sheared
-        # pairs — the host window stretches wall, not work CPU-seconds.
-        def _ev_cpu(leg: dict) -> float | None:
-            if leg.get("ev_per_exec_cpu_s"):
-                return leg["ev_per_exec_cpu_s"]
-            cpu = leg.get("cpu_s") or {}
-            tot = (cpu.get("exec") or 0.0) + (cpu.get("py") or 0.0)
-            return round(leg["events"] / tot, 1) if tot and leg.get("events") else None
-
-        lo_c, hi_c = _ev_cpu(lo), _ev_cpu(hi)
-        cpu_eff = round(hi_c / lo_c, 3) if lo_c and hi_c else None
-        ceiling = (lo.get("host_par_probe") or {}).get("ceiling")
-        groups.setdefault((n_events, commit), []).append(
-            {"pair": pidx, "lo": lo, "hi": hi, "eff": eff, "cls": cls,
-             "cpu_eff": cpu_eff, "lo_c": lo_c, "hi_c": hi_c,
-             "ceiling": ceiling}
-        )
-
-    sections = []
-    summary = []
-    for (n_events, commit), ps in sorted(groups.items()):
-        # variant markers (round 5): surface workdir fs / bucket count /
-        # batch shape so tmpfs and 32-bucket groups are not conflated with
-        # the default-disk 8-bucket rows they sit next to
-        v = []
-        fs = {p["lo"].get("workdir_fs") for p in ps} - {None, "?"}
-        if fs and fs != {"ext2/ext3"}:
-            v.append("workdir=" + "/".join(sorted(fs)))
-        bks = {p["lo"].get("buckets") for p in ps} - {None}
-        if bks:
-            v.append("buckets=" + "/".join(str(b) for b in sorted(bks)))
-        nb = {len(p["lo"].get("batch_phases") or []) for p in ps} - {0}
-        if nb == {1}:
-            v.append("single-batch")
-        if all(p["lo"].get("parts_fixed") for p in ps):
-            pts = {p["lo"].get("shuffle_parts") for p in ps}
-            v.append("constant-parts=" + "/".join(str(x) for x in sorted(pts)))
-        wms = {p["lo"].get("warmup_events") for p in ps} - {None, 400_000}
-        if wms:
-            v.append("warmup=" + "/".join(f"{w//1000}k" for w in sorted(wms)))
-        variant = (" [" + ", ".join(v) + "]") if v else ""
-        lines = "\n".join(
-            "| {} | {:,.0f} | {:,.0f} | {:.3f} | {} | {} | {} | {} | {} | {} |".format(
-                p["pair"], p["lo"]["events_per_sec"], p["hi"]["events_per_sec"],
-                p["eff"], p["cls"],
-                min(p["lo"].get("host_probe_mops", []) +
-                    p["hi"].get("host_probe_mops", []) or [0]),
-                p["lo_c"] or "—",
-                p["hi_c"] or "—",
-                f"{p['cpu_eff']:.3f}" if p["cpu_eff"] else "—",
-                f"{p['ceiling']:.3f}" if p.get("ceiling") else "—")
-            for p in ps
-        )
-        ok = sorted(p["eff"] for p in ps if p["cls"] != "SHEARED")
-        med = f"{statistics.median(ok):.3f}" if ok else "—"
-        cok = sorted(p["cpu_eff"] for p in ps if p["cpu_eff"])
-        cmed = f"{statistics.median(cok):.3f}" if cok else "—"
-        n_shear = sum(p["cls"] == "SHEARED" for p in ps)
-        note = f" ({n_shear}/{len(ps)} sheared, excluded)" if n_shear else ""
-        summary.append(
-            f"| {n_events:,} | {commit}{variant} | {len(ps)} | {med}{note} | "
-            f"{cmed} ({len(cok)} pairs) |")
-        sections.append(
-            f"### {n_events:,} events (commit {commit}{variant}) — wall median of "
-            f"rule-passing pairs: **{med}**{note}; CPU-normalized median "
-            f"(all attributed pairs): **{cmed}**\n\n"
-            "| pair | N ev/s | 4N ev/s | wall eff | hold rule | min bracket probe "
-            "| N ev/cpu-s | 4N ev/cpu-s | cpu eff | host fp ceiling |\n"
-            "|---|---|---|---|---|---|---|---|---|---|\n" + lines
-        )
-
-    md = """# BENCH/CLUSTER — multi-executor (separate worker JVMs) scaling pairs
-
-Same replay job as the headline `BENCH/BASELINE.md` pairs, but deployed the
-north rule's way: `spark-submit --py-files mbdm.zip jobs/replay_job.py` on
-`local-cluster[N,c,mem]` vs `local-cluster[4N,c,mem]` — each executor a REAL
-separate JVM (package distribution, task serialization, broadcast and
-shuffle all cross process boundaries).  Input generated once and copied per
-leg.  Pinning (round-4 topology): executor JVMs are re-pinned onto exactly
-the leg's executor-core budget (`N*c` cores) as they register, while the
-driver tree keeps a constant separate allotment in BOTH legs — the analog
-of a real cluster's dedicated driver node.  Pre-round-4 rows (n_exec 1 vs
-4, 1-core executors, driver sharing the executor pin) measured a topology
-artifact; they are retained below for provenance.  Pairs window-gated;
-the during-leg sampler classifies each pair held/SHEARED (pre-sampler rows:
-`no-sampler`, judged by bracket probes only).  This report is rebuilt from
-the FULL `BENCH/cluster_runs.jsonl` history on every run, so an all-sheared
-session records its rows without overwriting clean-window evidence.
-
-Metric note (round 4): rows carrying a `prestage_s` key measure the
-END-TO-END `apply_changes` wall — the same definition as the headline
-`BENCH/BASELINE.md` harness.  Earlier rows summed only per-batch walls,
-which EXCLUDED the whole-window prestage (the event scan + last-wins
-collapse — precisely the partition-parallel work that scales with
-executors) and so measured only the fixed-cost tail; their flat/over-unity
-efficiencies are a metric artifact, retained for provenance.
-
-CPU attribution (round 4): each leg samples /proc for every spark process
-and classifies CPU-seconds driver JVM / executor JVMs / python workers
-(`cpu_s` in the row); `exec_busy_frac` = executor CPU / (timed wall x
-executor core budget).  The first attributed pair (2026-08-19, 3.2M
-events) showed executor CPU-seconds INFLATING 285 -> 556 from 1 to 4
-executors — per-JVM JIT/codegen warmup replicated across fresh executor
-JVMs plus cross-process shuffle serialization — while the driver JVM burned
-as much CPU as the executors (a constant-node cost in this harness's
-dedicated-driver topology; on a real cluster the same work runs on the
-driver node).  Consequently legs now run an UNTIMED warmup replay first
-(`replay_job --warmup-events`, default 400k) — executors in the deploy
-shape are long-running services, so one-time per-JVM warmup does not
-belong in a steady-state throughput measurement — and `cpu_s` is scoped to
-the timed window via the job's `--t0-marker` handshake.
-
-## Pre-registered protocol change (round 5) — CPU-normalized efficiency
-
-Written BEFORE any round-5 pair ran.  Seven sessions of wall-time pairs at
->=3.2M events have ALL been sheared by the pre-registered during-leg hold
-rule — the sandbox host's deliverable CPU collapses mid-leg faster than any
-7-13-minute window stays clean, so the wall-time protocol measures the
-scheduler, not the engine.  The round-4 per-role CPU attribution makes a
-host-window-invariant figure possible, and it is hereby pre-registered as
-the PRIMARY multi-JVM scaling metric:
-
-- **per-leg figure**: `ev_per_exec_cpu_s` = events / (executor-JVM +
-  python-worker CPU-seconds), CPU sampled from /proc for the leg's own
-  spark-submit process tree only, scoped to the timed window (post-warmup,
-  via the `--t0-marker` handshake).  Driver-JVM CPU is excluded: it is a
-  constant-node cost in this dedicated-driver topology (a real cluster
-  runs it on the driver node at every cluster size).
-- **pair figure**: `cpu_eff` = ev_per_exec_cpu_s(4N) / ev_per_exec_cpu_s(N)
-  = exec_cpu_s(N) / exec_cpu_s(4N) (events are identical per leg).  It
-  measures how much MORE executor CPU the 4N topology burns per event
-  (cross-process shuffle, serialization, per-JVM overheads) — exactly the
-  engine-side cost that would cap throughput scaling on a real cluster
-  where each executor HAS its promised core.
-- **validity on sheared pairs**: a starved process accrues CPU-seconds in
-  proportion to delivered capacity — the host window stretches wall time,
-  not work.  cpu_eff is therefore computed on ALL attributed pairs, held
-  or sheared, and the group median over attributed pairs is the reported
-  number.  Wall-time efficiency remains reported alongside (secondary),
-  with the unchanged hold rule.  Measured limit of the invariance (first
-  round-5 session, recorded before any median was claimed): a DEEPLY
-  collapsed window (bracket probes < ~60 Mops vs ~200 clean) still
-  inflates the wider leg's CPU — involuntary preemption drives JVM lock
-  convoys/GC interference that burn real cycles — observed as a 0.471
-  outlier pair whose own gate probes flag it.  cpu_eff degrades gracefully
-  rather than binarily, the per-pair probes make degraded pairs visible,
-  and the group MEDIAN is the claim.
-- **criterion**: the north rule's >=0.8 N->4N efficiency is met on this
-  metric when the group median cpu_eff >= 0.8 — i.e. giving the job 4x the
-  executors costs <=25% extra CPU per event, so with 4x cores actually
-  delivered (the real-cluster case) throughput scales >=0.8x-linear.
-
-Addendum (pre-registered 2026-08-19, before the final round-5 group ran):
-each pair now also records the host's OWN per-process efficiency ceiling
-between the two leg footprints — the identical pure-CPU integer probe run
-at fp_N = N*c+driver and fp_4N = 4N*c+driver processes back-to-back before
-the legs; `host fp ceiling` = (mops(fp_4N)/fp_4N) / (mops(fp_N)/fp_N).  A
-perfectly-scaling job cannot show cpu_eff above this ceiling: on a
-contended/SMT host each CPU-second at the wider footprint does less work,
-and cpu_eff inherits that loss even when the ENGINE adds zero multi-JVM
-overhead.  The criterion stays median cpu_eff >= 0.8; the ceiling column
-says how much of any shortfall the host itself charges ANY job at that
-footprint — a pair with cpu_eff at-or-above its window's ceiling is
-evidence the engine's multi-JVM overhead is nil in that window.
-
-Addendum 2 (pre-registered 2026-08-20, before the 25.6M-event group ran):
-`--warmup-events` was a constant TOTAL per leg (400k), so each of the 4N
-leg's executors received 1/4 the JIT/codegen warmup coverage of the N
-leg's single executor — residual warm-up CPU is charged asymmetrically to
-the wider leg, biasing cpu_eff DOWNWARD (against us, but still a
-measurement artifact: deploy-shape executors are long-running services
-whose one-time warmup amortizes to zero at either size).  Groups marked
-`warmup=...` scale the warmup replay with the max executor count
-(400k x 4 = 1.6M events) so per-JVM warmup coverage is EQUAL across both
-legs; the criterion and every other knob are unchanged.  Rows carry
-`warmup_events` so the variant is visible in the raw history.
-
-IO-column caveat (measured 2026-08-19): this sandbox kernel charges a
-reaped child's /proc io counters to its parent — control experiment: a
-child that wrote 500 MB added exactly 500 MB to the parent's wchar AND
-write_bytes at reap, while the parent's utime/stime stayed self-only (CPU
-columns are NOT affected; the same control verified cutime/cstime remain
-separate).  Executor JVMs are children of the driver JVM in local-cluster
-mode, so any driver io row sampled after executors exit INCLUDES their io
-— the 10-15 GB "driver writes" in earlier 4N rows are this accounting
-artifact, not a data path (fd-offset tracing of the driver JVM found no fd
-carrying those bytes; its real io is jar reads + metadata).  Rows now also
-carry `io_driver_self_est_mb` = driver minus exec minus py as the
-best-effort self-only estimate.
-
-| events | commit | pairs | wall median eff (rule-passing) | cpu-normalized median eff |
-|---|---|---|---|---|
-""" + "\n".join(summary) + """
-
-A `—` median means NO pair in that group survived the hold rule — those
-sessions measure the host scheduler, not the engine, and are retained only
-as raw rows.  The 800k-event group is serial-cost-dominated (see the Amdahl
-decomposition in `BENCH/BASELINE.md`: per-batch driver-side cost S is
-constant, so small workloads under-read scaling); the 3.2M+ groups carry
-the cluster-topology scaling claim when a held pair exists.  The headline
-scaling evidence remains the larger-workload `BENCH/BASELINE.md` local[N]
-table; this file evidences that the SAME job, deployed in the true
-multi-executor topology, scales comparably — the engine's
-partition-parallel plan, not single-JVM thread sharing, carries the
-speedup.
-
-""" + "\n\n".join(sections) + "\n"
-    from scaling_bench import write_report_md
-
-    write_report_md(md, os.path.join(REPO, "BENCH", "CLUSTER.md"))
-    print(json.dumps({"groups": {f"{k[0]}@{k[1]}": len(v)
-                                 for k, v in groups.items()}}))
-
-
-if __name__ == "__main__":
-    if "--report-only" in sys.argv:
-        write_report(os.path.join(REPO, "BENCH", "cluster_runs.jsonl"))
-    else:
-        main()

@@ -17,8 +17,8 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
+import time
 
 
 def main() -> None:
@@ -31,22 +31,6 @@ def main() -> None:
     ap.add_argument("--dedup-salt", type=int, default=None)
     ap.add_argument("--no-evolve-schema", action="store_true")
     ap.add_argument("--rollback", action="store_true", help="roll the migration back instead")
-    ap.add_argument(
-        "--t0-marker", default=None,
-        help="touch this file when the TIMED apply starts (after any "
-             "warmup) — lets an external CPU-attribution sampler scope "
-             "per-role CPU-seconds to the measured window only",
-    )
-    ap.add_argument(
-        "--warmup-events", type=int, default=0,
-        help="before the timed apply, replay this many events into a "
-             "throwaway table clone (untimed).  Executors in the deploy "
-             "shape are long-running services; a fresh-JVM leg otherwise "
-             "charges each executor's one-time JIT/codegen warmup to the "
-             "measurement — measured 2026-08-19: a 4-executor leg burned "
-             "~2x the executor CPU-seconds of a 1-executor leg on the same "
-             "input, the difference being per-JVM warmup replicated 4x",
-    )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -56,12 +40,11 @@ def main() -> None:
 
     # Apply the engine's SQL confs (mongo_bulk_data_migration_spark/
     # session.py: engine_conf) WITHOUT overriding spark-submit's master/
-    # deploy settings.  A bare builder silently ran the deploy shape with
-    # stock defaults — including snappy parquet, whose native codec path
-    # serializes under many concurrent writers of nested (token-array)
-    # columns in this environment (see session.py) — so the cluster legs
-    # measured codec contention, not the engine.  Master, deploy mode,
-    # driver memory, shuffle partitions, locality and local dirs stay
+    # deploy settings.  A bare builder would run with stock defaults,
+    # including snappy parquet for table and changelog files, whose native
+    # codec path serializes under many concurrent writers of nested
+    # (token-array) columns (see session.py).  Master, deploy mode, driver
+    # memory, shuffle partitions, locality and local dirs stay
     # submit-controlled.
     from mongo_bulk_data_migration_spark.session import engine_conf
 
@@ -82,36 +65,6 @@ def main() -> None:
         print(json.dumps({"rollback": res}, default=str))
         return
     events = spark.read.parquet(args.events)
-    import time
-
-    if args.warmup_events > 0:
-        import shutil
-        import tempfile
-
-        from pyspark.sql import functions as F
-
-        wtmp = tempfile.mkdtemp(prefix="replay_warm_")
-        try:
-            # clone the table's CURRENT content into a scratch warehouse and
-            # replay a bounded event slice through the full engine path —
-            # same plans, same codegen shapes, nothing of the timed state
-            src_tbl = os.path.join(args.warehouse, args.table)
-            shutil.copytree(src_tbl, os.path.join(wtmp, args.table))
-            warm = ChangeStreamReplayer(
-                spark, wtmp, args.table, f"{args.migration_id}-warm",
-                options=MigrationOptions(dedup_salt=args.dedup_salt),
-                evolve_schema=not args.no_evolve_schema,
-            )
-            warm.apply_changes(
-                events.where(F.col("seq") < args.warmup_events),
-                events_per_batch=max(args.warmup_events // 2, 1),
-            )
-        finally:
-            shutil.rmtree(wtmp, ignore_errors=True)
-
-    if args.t0_marker:
-        with open(args.t0_marker, "w") as f:
-            f.write(str(time.time()))
     t0 = time.monotonic()
     metrics = rep.apply_changes(events, events_per_batch=args.events_per_batch)
     wall = time.monotonic() - t0
@@ -122,13 +75,9 @@ def main() -> None:
             {
                 "batches": len(metrics),
                 "events": n,
-                # end-to-end apply_changes wall — the SAME definition the
-                # headline scaling harness (jobs/scaling_bench.py) uses.
-                # Summing only per-batch walls (the pre-round-4 metric)
-                # excluded the whole-window prestage — the event scan +
-                # last-wins collapse that is precisely the partition-parallel
-                # work that scales with executors — so cluster pairs measured
-                # only the fixed-cost tail and read as flat.
+                # end-to-end apply_changes wall, the whole-window prestage
+                # (event scan + last-wins collapse) included; the per-batch
+                # walls alone leave out that partition-parallel work
                 "wall_s": round(wall, 2),
                 "events_per_sec": round(n / wall, 1) if wall else None,
                 "batches_wall_s": round(batches_wall, 2),

@@ -138,10 +138,12 @@ class Changelog:
         No batch-marker fast path here on purpose: after a crash between the
         changelog commit and the merge commit, a FETCH_ALL resume can process
         a *different* key set under the same batch_id, and a marker-based skip
-        would silently drop those keys' backups.  Idempotence comes from the
-        per-key first-write-wins anti join (plus exact (key, kind, batch)
-        guards for tombstone/reinsert markers), which is safe under replays
-        regardless of what keys the re-run carries.
+        would silently drop those keys' backups.  Idempotence comes from one
+        per-key aggregate of the log, left-joined to the pre-image
+        (:meth:`_flag_join`): a key with any backup gets no second one
+        (first-write-wins), and a tombstone/reinsert marker is skipped when
+        the log already holds one of its kind at or after this batch.  That
+        is safe under replays regardless of what keys the re-run carries.
         """
         import time as _time
 

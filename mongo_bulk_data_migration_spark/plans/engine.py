@@ -70,10 +70,9 @@ class MongoBulkDataMigrationSpark:
         """P1/P2: fetched-and-projected columns are what gets backed up
         (``/root/reference/README.md:18``; `rollback.test.ts:110-160`)."""
         cols = self._projected(target)
-        opts = self.config.options
-        for subset in (opts.projection_backup_filter, opts.cdc_backup_cols):
-            if subset is not None:  # P2 / its replayer analog: a subset
-                cols = [c for c in cols if c in subset]
+        subset = self.config.options.projection_backup_filter
+        if subset is not None:  # P2: a subset
+            cols = [c for c in cols if c in subset]
         return cols
 
     def _resolve_query(self, target: LakeTable, df: DataFrame) -> DataFrame:

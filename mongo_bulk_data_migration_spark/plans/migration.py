@@ -42,7 +42,10 @@ class MigrationOptions:
     """Reference options (``/root/reference/src/types.ts:10-34``) re-mapped."""
 
     max_bulk_size: int = 5000           # rows per micro-batch commit (MBDM.ts:25)
-    projection_backup_filter: list[str] | None = None  # P2 (_.pick of keys)
+    # P2 (_.pick of keys): back up only these columns, for update() and the
+    # CDC replayer alike.  None backs up every projected column; a subset
+    # cuts the changelog write at the cost that rollback restores only these
+    projection_backup_filter: list[str] | None = None
     dont_count: bool = False            # A1 skip pre-count (types.ts:20-21)
     continue_on_bulk_write_error: bool = False  # B5 dead-letter instead of abort
     throttle_ms: int = 0                # B3 sleep between batches
@@ -57,12 +60,6 @@ class MigrationOptions:
     # pushes into the source, the right trade for file-backed or generated
     # event logs (which is also what crash-resume determinism assumes).
     stage_pending: bool = False
-    # P1/P2 for the CDC replayer (VERDICT r5 #2): restrict the changelog
-    # pre-image to these columns ("what is projected is what is restorable",
-    # reference README.md:18).  None (default) backs up the full row; a
-    # subset cuts the changelog write — the dominant per-batch phase — at
-    # the documented cost that rollback restores only these columns.
-    cdc_backup_cols: list[str] | None = None
 
 
 @dataclass

@@ -40,6 +40,7 @@ def engine_conf() -> dict[str, str]:
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "256m",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # the codec of LakeTable and changelog data files (MBDM_CODEC).
         # measured in this environment: native codec paths (snappy/lz4/zstd)
         # serialize pathologically under many concurrent writers of nested
         # (array/struct) columns — uncompressed is 3-8x faster end-to-end.

@@ -487,15 +487,9 @@ class LakeTable:
         if repartition:
             # one shuffle, co-partitioned by bucket -> few files per bucket
             w = w.repartition(BUCKET_COL)
-        # uncompressed: native codecs contend badly under concurrent nested-
-        # column writers (measured 3-8x); override via MBDM_TABLE_CODEC
-        codec = os.environ.get("MBDM_TABLE_CODEC", "uncompressed")
-        (
-            w.write.partitionBy(BUCKET_COL)
-            .option("compression", codec)
-            .mode("overwrite")
-            .parquet(out)
-        )
+        # codec: the session's spark.sql.parquet.compression.codec
+        # (session.engine_conf)
+        w.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(out)
         entries: list[dict[str, Any]] = []
         for bdir in sorted(os.listdir(out)):
             if not bdir.startswith(f"{BUCKET_COL}="):
@@ -902,7 +896,7 @@ class PendingCommit:
         self,
         table: LakeTable,
         snap: Snapshot,
-        added_entries: list[dict[str, Any]] | None = None,
+        added_entries: list[dict[str, Any]],
         replaced_buckets: set[int] | None = None,
         operation: str | None = None,
     ):
@@ -936,8 +930,7 @@ class PendingCommit:
             self.table._write_snapshot(self.snap)
             return self.snap.version
         except CommitConflictError:
-            if self.added_entries is None:
-                raise  # legacy caller: no rebase information
+            pass
         for _ in range(MAX_COMMIT_RETRIES):
             snap = self._rebase(applied, properties)  # raises if non-commuting
             try:

@@ -435,23 +435,3 @@ def test_first_changelog_append_plans_no_log_join(spark, tmp_path, monkeypatch):
     # the second append also scans the changelog itself
     assert second.count("Relation [") == first.count("Relation [") + 1
 
-
-def test_report_writer_preserves_manual_evidence(tmp_path):
-    """BENCH report regeneration must keep everything below MANUAL_MARKER
-    (a regeneration once dropped the official-run records)."""
-    import sys, os
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
-    from scaling_bench import MANUAL_MARKER, write_report_md
-
-    p = str(tmp_path / "r.md")
-    write_report_md("# gen v1\n", p)
-    assert open(p).read() == "# gen v1\n"
-    with open(p, "a") as f:
-        f.write("\n" + MANUAL_MARKER + "\ncurated evidence\n")
-    write_report_md("# gen v2\n", p)
-    out = open(p).read()
-    assert out.startswith("# gen v2\n")
-    assert MANUAL_MARKER in out and "curated evidence" in out
-    # idempotent: regenerating again keeps exactly one manual section
-    write_report_md("# gen v3\n", p)
-    assert open(p).read().count(MANUAL_MARKER) == 1

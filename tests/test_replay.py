@@ -574,16 +574,16 @@ def test_direct_vs_staged_pending_parity(spark, warehouse, tmp_path):
     assert rows_of(cld.drop("date")) == rows_of(cls.drop("date"))
 
 
-def test_cdc_backup_cols_subset_roundtrip(spark, warehouse):
-    """VERDICT r5 #2: `cdc_backup_cols` scopes the CDC changelog pre-image
-    (P1/P2 through the replayer).  Non-listed columns are stored NULL in the
-    backup struct (smaller changelog writes); listed columns still rollback
-    to their initial values."""
+def test_projection_backup_filter_replay_roundtrip(spark, warehouse):
+    """VERDICT r5 #2: `projection_backup_filter` scopes the CDC changelog
+    pre-image (P2 through the replayer).  Non-listed columns are stored NULL
+    in the backup struct (smaller changelog writes); listed columns still
+    rollback to their initial values."""
     cat, t, events, sim = setup_run(spark, warehouse)
     initial = {r["doc_id"]: r for r in rows_of(t.read(spark))}
     rep = ChangeStreamReplayer(
         spark, warehouse, "seq", "cdcP",
-        options=MigrationOptions(cdc_backup_cols=["tokens", "n_tok"]),
+        options=MigrationOptions(projection_backup_filter=["tokens", "n_tok"]),
     )
     rep.apply_changes(changes_spark(spark, events), events_per_batch=PER_BATCH)
 
